@@ -185,7 +185,7 @@ object Verify {
         val bruteW = graft.ann.Similarity.bruteForceTopK(wide,
             wide.filter(col("vec_id") < nQ), 5)
           .select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val bqW = graft.ann.Similarity.binaryTopKN(wide, 5,
+        val bqW = graft.ann.Similarity.binaryTopK(wide, 5,
             graft.operators.AnnQueries.WideDim, nQ, numRows = nEmb)
           .select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         val rec = if (bruteW.isEmpty) 1.0
@@ -196,7 +196,7 @@ object Verify {
       // emb_ann_binary_incremental: (1) EXACT probe equality — a code
       // table built as corpus-assign + batch-append must probe
       // identically to a one-shot assignment of the union under the
-      // same anchors (SignPack is deterministic given anchors);
+      // same anchors (SignPackN is deterministic given anchors);
       // (2) recall floor vs brute force restricted to the batch's
       // queries.
       val (incBqEq, incBqRecall) = {

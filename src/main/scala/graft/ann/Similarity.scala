@@ -134,16 +134,20 @@ object Similarity {
   }
 
   /** Binary sign-quantization ANN (1 bit per dimension): each vector
-    * packs to ONE long (bit i = sign of the centered component; the
+    * packs to ⌈dim/64⌉ longs ([[graft.functions.VectorExpressions.SignPackN]];
+    * bit b of word w = sign of centered component 64w+b; the
     * per-dimension anchors are the component means of the bounded
     * deterministic training sample, so a biased embedding space still
-    * splits ~50/50 per bit), the prefilter scans CODES ONLY — xor +
-    * bit_count per (query, row), 32× less data than the floats, the
-    * compressed-scan deployment: at 100 TB the code column is ~1.6 TB
-    * and the float vectors never leave parquet until rerank — keeps
-    * the `cand` smallest Hamming distances per query through a salted
-    * two-level top-C (never a #queries-partition window over the
-    * corpus), and reranks the survivors with the exact cosine.
+    * splits ~50/50 per bit). The prefilter scans CODES ONLY — Hamming
+    * is one codegen'd word-loop kernel
+    * ([[graft.functions.VectorExpressions.CodeHamming]], Σ
+    * bit_count(xor) per word) per (query, row), 32× less data than the
+    * floats at any width: at 100 TB of 1024-dim vectors the prefilter
+    * scans ~3 TB of codes and the floats never leave parquet until
+    * rerank. It keeps the `cand` smallest Hamming distances per query
+    * through a salted two-level top-C (never a #queries-partition
+    * window over the corpus) and reranks the survivors with the exact
+    * cosine. At dim ≤ 64 the code is one word.
     * Reference: cdp has no vector ops; §2.7 extension (the ANN scale
     * ladder: brute → LSH/IVF/PQ → binary codes).
     */
@@ -151,7 +155,6 @@ object Similarity {
                  cand: Int = 0, salts: Int = 32,
                  idCol: String = "vec_id", vecCol: String = "embedding",
                  numRows: Long = -1L, broadcastMaxRows: Long = 2_000_000L): DataFrame = {
-    require(dim <= 64, s"binaryTopK packs into one long: dim <= 64, got $dim")
     val b = vectors.select(col(idCol), col(vecCol))
     val n = if (numRows >= 0) numRows else b.count()
     val anchors = binaryAnchors(vectors, dim, idCol, vecCol)
@@ -172,7 +175,7 @@ object Similarity {
 
   /** Sign-code assignment under FIXED anchors — the binary index's
     * unit of append: once the anchors are trained, admitting a new
-    * batch to the persisted code table is ONE codegen'd SignPack pass
+    * batch to the persisted code table is ONE codegen'd SignPackN pass
     * (deterministic, embarrassingly parallel), never a retrain and
     * never a corpus re-scan — the same append discipline as
     * [[ivfAssign]] and the dedup indexes.
@@ -181,13 +184,13 @@ object Similarity {
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame =
     vectors.select(col(idCol).as("nid"),
-      graft.functions.VectorExpressions.signPack(col(vecCol), anchors).as("code"))
+      graft.functions.VectorExpressions.signPackN(col(vecCol), anchors).as("code"))
 
   /** Probe a persisted code table: Hamming prefilter over CODES only
-    * (query codes broadcast; xor + bit_count per pair — the
-    * 32×-compressed scan), exact salted two-level top-C, exact cosine
-    * rerank. Codes are pure functions of (vector, anchors), so an
-    * incrementally-appended table probes IDENTICALLY to a one-shot
+    * (query codes broadcast; one CodeHamming kernel call per pair —
+    * the 32×-compressed scan), exact salted two-level top-C, exact
+    * cosine rerank. Codes are pure functions of (vector, anchors), so
+    * an incrementally-appended table probes IDENTICALLY to a one-shot
     * assignment of the union under the same anchors.
     */
   def binaryProbe(codes: DataFrame, vectors: DataFrame, queries: DataFrame,
@@ -207,83 +210,15 @@ object Similarity {
     val effCand = if (cand > 0) cand
       else math.max(128L, math.min(4096L, n / 8)).toInt
     val qC = queries.select(col(idCol).as("qid"),
-      graft.functions.VectorExpressions.signPack(col(vecCol), anchors).as("qcode"))
-    val pairs = codes.join(broadcast(qC), col("qid") =!= col("nid"))
-      .withColumn("ham", bit_count(col("code").bitwiseXOR(col("qcode"))))
-      .select("qid", "nid", "ham")
-    // exact top-C per query in two levels: per-salt top-C (salts ×
-    // #queries groups — parallel), then top-C of the salts × C
-    // survivors (bounded rows). Any global top-C row is top-C within
-    // its salt, so the composition is exact, ties broken by nid.
-    val w1 = Window.partitionBy("qid", "salt").orderBy(col("ham").asc, col("nid"))
-    val lvl1 = pairs.withColumn("salt", pmod(hash(col("nid")), lit(salts)))
-      .withColumn("r1", row_number().over(w1)).filter(col("r1") <= effCand)
-    val w2 = Window.partitionBy("qid").orderBy(col("ham").asc, col("nid"))
-    val candSet = lvl1.withColumn("r2", row_number().over(w2))
-      .filter(col("r2") <= effCand).select("qid", "nid")
-    scoreCandidates(candSet, b, k, idCol, vecCol, n, broadcastMaxRows)
-  }
-
-  /** [[binaryTopK]] lifted past 64 dimensions — the production-width
-    * deployment (768/1024/4096-dim embedding stores): codes are
-    * `array<long>` of ⌈dim/64⌉ words ([[graft.functions.VectorExpressions.SignPackN]]),
-    * Hamming is one native word-loop kernel
-    * ([[graft.functions.VectorExpressions.CodeHamming]] — Σ
-    * bit_count(xor) per word, codegen'd), and the salted two-level
-    * top-C + exact cosine rerank are IDENTICAL to the one-long path.
-    * The compression ratio is the same 32× at any width (1 bit per
-    * 32-bit float), so at 100 TB of 1024-dim vectors the prefilter
-    * scans ~3 TB of codes and the floats never leave parquet until
-    * rerank.
-    */
-  def binaryTopKN(vectors: DataFrame, k: Int, dim: Int, nQueries: Int,
-                  cand: Int = 0, salts: Int = 32,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  numRows: Long = -1L, broadcastMaxRows: Long = 2_000_000L): DataFrame = {
-    val b = vectors.select(col(idCol), col(vecCol))
-    val n = if (numRows >= 0) numRows else b.count()
-    val anchors = binaryAnchors(vectors, dim, idCol, vecCol)
-    binaryProbeN(binaryAssignN(vectors, anchors, idCol, vecCol),
-      vectors, vectors.filter(col(idCol) < nQueries), anchors, k,
-      cand, salts, idCol, vecCol, n, broadcastMaxRows)
-  }
-
-  /** Multi-word sign-code assignment under FIXED anchors — the same
-    * assign-only append unit as [[binaryAssign]], at any dimension.
-    */
-  def binaryAssignN(vectors: DataFrame, anchors: Seq[Double],
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame =
-    vectors.select(col(idCol).as("nid"),
-      graft.functions.VectorExpressions.signPackN(col(vecCol), anchors).as("code"))
-
-  /** Probe a persisted MULTI-WORD code table: Hamming prefilter over
-    * the array<long> codes only (query codes broadcast; one
-    * [[graft.functions.VectorExpressions.CodeHamming]] kernel call
-    * per pair), exact salted two-level top-C, exact cosine rerank —
-    * the [[binaryProbe]] contract at production dims. Same
-    * determinism: an incrementally-appended table probes identically
-    * to a one-shot assignment under the same anchors.
-    */
-  def binaryProbeN(codes: DataFrame, vectors: DataFrame, queries: DataFrame,
-                   anchors: Seq[Double], k: Int,
-                   cand: Int = 0, salts: Int = 32,
-                   idCol: String = "vec_id", vecCol: String = "embedding",
-                   numRows: Long = -1L, broadcastMaxRows: Long = 2_000_000L): DataFrame = {
-    val b = vectors.select(col(idCol), col(vecCol))
-    val n = if (numRows >= 0) numRows else b.count()
-    // Past 64 dims the Hamming resolution sharpens (more planes than
-    // the one-long fixture), so the shortlist can sit closer to the
-    // fixed-oversample regime — but keep the same corpus-tracking
-    // floor as binaryProbe so small fixtures hold recall.
-    val effCand = if (cand > 0) cand
-      else math.max(128L, math.min(4096L, n / 8)).toInt
-    val qC = queries.select(col(idCol).as("qid"),
       graft.functions.VectorExpressions.signPackN(col(vecCol), anchors).as("qcode"))
     val pairs = codes.join(broadcast(qC), col("qid") =!= col("nid"))
       .withColumn("ham",
         graft.functions.VectorExpressions.codeHamming(col("code"), col("qcode")))
       .select("qid", "nid", "ham")
+    // exact top-C per query in two levels: per-salt top-C (salts ×
+    // #queries groups — parallel), then top-C of the salts × C
+    // survivors (bounded rows). Any global top-C row is top-C within
+    // its salt, so the composition is exact, ties broken by nid.
     val w1 = Window.partitionBy("qid", "salt").orderBy(col("ham").asc, col("nid"))
     val lvl1 = pairs.withColumn("salt", pmod(hash(col("nid")), lit(salts)))
       .withColumn("r1", row_number().over(w1)).filter(col("r1") <= effCand)

@@ -311,11 +311,11 @@ object AnnQueries {
         .select("doc_id", "r_lex", "r_vec", "rrf")
     },
 
-    // Binary sign-quantization ANN: 1 bit per dimension packed into
-    // ONE long, Hamming prefilter over codes only (xor + bit_count —
-    // a 32×-compressed corpus scan), exact cosine rerank of the top-C
-    // survivors. Rows-only; recall floor + prefilter-exactness are
-    // the Verify invariant.
+    // Binary sign-quantization ANN: 1 bit per dimension (64 dims pack
+    // into a one-word code), Hamming prefilter over codes only (the
+    // CodeHamming kernel — a 32×-compressed corpus scan), exact
+    // cosine rerank of the top-C survivors. Rows-only; recall floor +
+    // prefilter-exactness are the Verify invariant.
     "emb_ann_binary" -> { (s, d) =>
       Similarity.binaryTopK(Tables.embeddings(s, d), TopK, Dim, NQueries,
           numRows = Tables.cachedCount(s, d, "embeddings"))
@@ -327,11 +327,11 @@ object AnnQueries {
     // ARRAYS (SignPackN), Hamming is the native word-loop kernel
     // (CodeHamming), everything downstream (salted top-C, exact
     // cosine rerank) identical. This is the shape a real 768/1024-dim
-    // embedding store runs; the one-long emb_ann_binary is its ≤64-dim
-    // special case. Rows-only; recall floor + wide-fixture cosine
+    // embedding store runs; emb_ann_binary is the same call at 64
+    // dims. Rows-only; recall floor + wide-fixture cosine
     // preservation are Verify invariants.
     "emb_ann_binary_wide" -> { (s, d) =>
-      Similarity.binaryTopKN(wideEmbeddings(s, d), TopK, WideDim, NQueries,
+      Similarity.binaryTopK(wideEmbeddings(s, d), TopK, WideDim, NQueries,
           numRows = Tables.cachedCount(s, d, "embeddings"))
         .orderBy("qid", "rnk")
     },
@@ -445,7 +445,7 @@ object AnnQueries {
     // Incremental binary-code index: the corpus (vec_id%10 >= 3)
     // trains the sign anchors and builds the code table; the new
     // batch (vec_id%10 < 3) is admitted ASSIGN-ONLY (one codegen'd
-    // SignPack pass — no retrain, no corpus re-scan), then probes the
+    // SignPackN pass — no retrain, no corpus re-scan), then probes the
     // merged table for its top-k. Rows-only; Verify pins (1) EXACT
     // probe equality of the appended table vs a one-shot assignment
     // under the same anchors and (2) recall vs brute force on the

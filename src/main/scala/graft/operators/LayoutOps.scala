@@ -64,14 +64,6 @@ object LayoutOps {
     (v.bitwiseOR(shiftleft(v, 1))).bitwiseAND(lit(0x5555555555555555L))
   }
 
-  /** 32-bit Morton code of two 16-bit bucket ids: a's bits at even
-    * positions, b's at odd.
-    */
-  def morton(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    spread16(a).bitwiseOR(shiftleft(spread16(b), 1))
-  }
-
   /** Spread the low 16 bits of `x` to every THIRD bit position (the
     * Morton-3D mask-and-shift, masks from the standard 21-bit form —
     * inputs here are ≤ 0xFFFF so the top bits stay clear).
@@ -136,26 +128,13 @@ object LayoutOps {
     mortonN(buckets)
   }
 
-  /** Z-value of two numeric columns (the binary special case). */
-  def zValue(df: DataFrame, c1: String, c2: String): org.apache.spark.sql.Column =
-    zValueN(df, Seq(c1, c2))
-
-  /** Write `df` Z-ordered by `(c1, c2)`: range-partitioned on the
+  /** Write `df` Z-ordered by 2–4 columns: range-partitioned on the
     * z-value into `files` output files, z-sorted within each, small
     * parquet row groups so the reader's min/max pruning has fine
     * granularity. The write pays one range exchange; every later scan
-    * with a selective predicate on c1 OR c2 reads a fraction of the
-    * row groups (LayoutOpsSpec measures the scan-rows ratio against
-    * the same data laid out randomly).
-    */
-  def writeZOrdered(df: DataFrame, c1: String, c2: String, path: String,
-                    files: Int = 32): Unit =
-    writeZOrderedN(df, Seq(c1, c2), path, files)
-
-  /** N-ary Z-ordered write (2–4 columns), same layout contract as the
-    * binary form: one range exchange on the z-value at write time,
-    * then any selective predicate on any interleaved column prunes
-    * row groups via parquet min/max stats.
+    * with a selective predicate on any interleaved column reads a
+    * fraction of the row groups (LayoutOpsSpec measures the scan-rows
+    * ratio against the same data laid out randomly).
     */
   def writeZOrderedN(df: DataFrame, cols: Seq[String], path: String,
                      files: Int = 32): Unit = {
@@ -182,7 +161,7 @@ object LayoutOps {
     df.write.mode("overwrite").partitionBy(partCol).parquet(path)
 
   /** Hilbert value of two numeric columns: the same one-pass min/max
-    * 16-bit bucketing as [[zValue]], but interleaved along the
+    * 16-bit bucketing as [[zValueN]], but interleaved along the
     * order-16 Hilbert curve instead of Morton. Consecutive Hilbert
     * indexes are always edge-adjacent cells (no quadrant-seam jumps),
     * so a box predicate decomposes into fewer, longer index runs —
@@ -203,7 +182,7 @@ object LayoutOps {
     graft.functions.VectorExpressions.hilbert2(buckets(0), buckets(1))
   }
 
-  /** Hilbert-ordered write — same layout contract as [[writeZOrdered]]
+  /** Hilbert-ordered write — same layout contract as [[writeZOrderedN]]
     * (one range exchange at write time, small row groups for min/max
     * pruning), curve order instead of Z.
     */
@@ -261,132 +240,6 @@ object LayoutOps {
       .parquet(path)
   }
 
-  // ---- File-level zone maps: a MANIFEST of per-file min/max stats.
-  // Parquet footers already prune ROW GROUPS, but Spark still lists,
-  // opens, and plans a task for every file — at 100 TB (hundreds of
-  // thousands of files) the listing and task-scheduling overhead
-  // dominates a selective scan. The manifest is the lakehouse
-  // data-skipping trick (Delta/Iceberg file stats) on vanilla
-  // parquet: a kilobytes-scale sidecar consulted BEFORE Spark ever
-  // sees the file list, so a narrow predicate plans only the
-  // surviving files. ----
-
-  /** Write `df` range-partitioned on `statsCol` (tight per-file value
-    * ranges — the layout that makes zone maps selective) plus a
-    * `_manifest` sidecar of per-file (min, max, rows) for `statsCol`,
-    * computed from the data actually written.
-    */
-  def writeWithManifest(df: DataFrame, statsCol: String, path: String,
-                        files: Int = 32): Unit = {
-    import org.apache.spark.sql.functions._
-    df.repartitionByRange(files, col(statsCol))
-      .sortWithinPartitions(statsCol)
-      .write.mode("overwrite").parquet(path)
-    val spark = df.sparkSession
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col(statsCol)).as("lo"), max(col(statsCol)).as("hi"),
-        count(lit(1)).as("rows"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_manifest")
-  }
-
-  /** Append a new batch to a manifest-tracked table — the daily-crawl
-    * shape the incremental dedup/sketch/histogram indexes already
-    * model: data files land with `mode("append")`, and the sidecar
-    * gains (min, max, rows) rows for ONLY the files this batch wrote
-    * (discovered by a before/after listing diff, so the stats job
-    * reads just the new files — never a table rescan). The merged
-    * manifest rewrites atomically-enough for the single-writer
-    * append cadence this models (collected to the driver first — the
-    * sidecar is kilobytes — so the rewrite never reads what it
-    * overwrites).
-    */
-  def appendWithManifest(df: DataFrame, statsCol: String, path: String,
-                         files: Int = 8): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = df.sparkSession
-    val sidecar = s"$path/_manifest"
-    val old = spark.read.parquet(sidecar)
-      .select("file", "lo", "hi", "rows").collect().toSeq
-    val before = listDataFiles(spark, path)
-    df.repartitionByRange(files, col(statsCol))
-      .sortWithinPartitions(statsCol)
-      .write.mode("append").parquet(path)
-    val fresh = (listDataFiles(spark, path) -- before).toSeq.sorted
-    val freshStats = spark.read.parquet(fresh: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col(statsCol)).as("lo"), max(col(statsCol)).as("hi"),
-        count(lit(1)).as("rows"))
-    val schema = freshStats.schema
-    val merged = old ++ freshStats.collect()
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(merged, 1), schema)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(sidecar)
-  }
-
-  /** Compaction plan from the manifest alone (driver-side, the sidecar
-    * is kilobytes at any table size): the data files holding fewer than
-    * `targetRows` rows — the small-file debt the append cadence
-    * accumulates — plus how many target-sized outputs their union
-    * repacks into. Files already at or above target are never
-    * rewritten (no write amplification on settled data).
-    */
-  def compactionPlan(spark: SparkSession, path: String,
-                     targetRows: Long): (Seq[String], Seq[String], Int) = {
-    val rowsOf = spark.read.parquet(s"$path/_manifest")
-      .select("file", "rows").collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-    val (small, keep) = rowsOf.partition(_._2 < targetRows)
-    val total = small.map(_._2).sum
-    val nOut = math.max(1L, (total + targetRows - 1) / targetRows).toInt
-    (small.map(_._1).toSeq.sorted, keep.map(_._1).toSeq.sorted, nOut)
-  }
-
-  /** Execute the plan: ONE job range-repartitions the union of the
-    * small files on `statsCol` into `nOut` target-sized,
-    * range-clustered outputs (compaction must not destroy the zone-map
-    * locality the range writes bought — a hash repack would smear
-    * every range over every file), appends them, deletes the originals
-    * and rewrites the sidecar (kept rows + fresh stats for the new
-    * files). Only small-file bytes move; settled files are untouched.
-    * Single-writer cadence, like [[appendWithManifest]]. Returns
-    * (#files compacted away, #files written).
-    */
-  def compact(spark: SparkSession, path: String, statsCol: String,
-              targetRows: Long): (Int, Int) = {
-    import org.apache.spark.sql.functions._
-    val (small, keep, nOut) = compactionPlan(spark, path, targetRows)
-    if (small.size <= 1) return (0, 0)
-    val sidecar = s"$path/_manifest"
-    val keptRows = spark.read.parquet(sidecar)
-      .filter(col("file").isin(keep: _*))
-      .select("file", "lo", "hi", "rows").collect().toSeq
-    val before = listDataFiles(spark, path)
-    spark.read.parquet(small: _*)
-      .repartitionByRange(nOut, col(statsCol))
-      .sortWithinPartitions(statsCol)
-      .write.mode("append").parquet(path)
-    val fresh = (listDataFiles(spark, path) -- before).toSeq.sorted
-    val freshStats = spark.read.parquet(fresh: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col(statsCol)).as("lo"), max(col(statsCol)).as("hi"),
-        count(lit(1)).as("rows"))
-    val schema = freshStats.schema
-    val merged = keptRows ++ freshStats.collect()
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(merged, 1), schema)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(sidecar)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    small.foreach { f =>
-      fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false)
-    }
-    (small.size, fresh.size)
-  }
-
   /** Data files (not sidecars/markers) under `path`, as Hadoop URIs. */
   private def listDataFiles(spark: SparkSession, path: String): Set[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -399,36 +252,16 @@ object LayoutOps {
       .toSet
   }
 
-  /** Scan `path` for `statsCol ∈ [lo, hi]`, consulting the manifest
-    * first: only files whose [min, max] intersects the predicate reach
-    * Spark's reader (the residual filter still applies — zone maps are
-    * a superset prefilter, so results are exactly the plain scan's).
-    * Returns the pruned frame plus (surviving, total) file counts so
-    * callers can report the skip ratio.
-    */
-  def readPruned(spark: SparkSession, path: String, statsCol: String,
-                 lo: Any, hi: Any): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions._
-    val manifest = spark.read.parquet(s"$path/_manifest")
-      .select("file", "lo", "hi").collect()
-    val survivors = manifest.filter(r =>
-      !(cmp(r.get(2), lo) < 0 || cmp(r.get(1), hi) > 0)).map(_.getString(0))
-    val pruned =
-      if (survivors.isEmpty)
-        spark.read.parquet(path).filter(col(statsCol) >= lit(lo) && lit(false))
-      else spark.read.parquet(survivors.toIndexedSeq: _*)
-        .filter(col(statsCol) >= lit(lo) && col(statsCol) <= lit(hi))
-    (pruned, survivors.length, manifest.length)
-  }
-
   // ---- Bloom-filter manifests: FILE skipping for point lookups on a
-  // hash-distributed key, where [min, max] zone maps prune NOTHING
-  // (every file's range spans the whole domain). The sidecar carries
+  // hash-distributed key, where [min, max] zone maps (ManifestLog's
+  // snapshots) prune NOTHING (every file's range spans the whole
+  // domain). Parquet footers already prune ROW GROUPS, but Spark still
+  // lists, opens and plans a task for every file. The sidecar carries
   // one Bloom filter per data file; a point probe consults the blooms
   // (kilobytes on the driver) and reads only files that might contain
   // the key. False positives only ADD files — the residual filter
   // still applies, so results equal the plain scan exactly (the same
-  // superset-prefilter contract as the zone maps above). At 100 TB
+  // superset-prefilter contract as the zone maps). At 100 TB
   // this is "find document by id across the crawl" without touching
   // 99% of files. ----
 
@@ -478,8 +311,8 @@ object LayoutOps {
 
   /** Append a batch to a bloom-tracked table: new files discovered by
     * listing diff get their own filters; existing sidecar rows are
-    * untouched (Blooms never need rewriting on append — the same
-    * single-writer cadence as [[appendWithManifest]]).
+    * untouched (Blooms never need rewriting on append; single-writer
+    * cadence — the listing diff would race a concurrent writer).
     */
   def appendWithBloomManifest(df: DataFrame, keyCol: String, path: String,
                               files: Int = 8, expectedPerFile: Long = 1000000L,
@@ -553,17 +386,5 @@ object LayoutOps {
       if (survivors.isEmpty) spark.read.parquet(path).filter(lit(false))
       else spark.read.parquet(survivors.toIndexedSeq: _*)
     (pruned, survivors.length, manifest.length)
-  }
-
-  /** Ordering across the numeric/orderable types a stats column can
-    * carry (manifest values arrive as Any from Row.get).
-    */
-  private def cmp(a: Any, b: Any): Int = (a, b) match {
-    case (x: Long, y: Long)     => java.lang.Long.compare(x, y)
-    case (x: Int, y: Int)       => java.lang.Integer.compare(x, y)
-    case (x: Double, y: Double) => java.lang.Double.compare(x, y)
-    case (x: Number, y: Number) => java.lang.Double.compare(x.doubleValue(), y.doubleValue())
-    case (x: String, y: String) => x.compareTo(y)
-    case other => throw new IllegalArgumentException(s"unorderable manifest pair: $other")
   }
 }

@@ -13,9 +13,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * mutates an existing data file, and unique dirs mean concurrent
   * writers can each identify their own files without racing on a
   * directory diff), and commits one SNAPSHOT — a pointer file
-  * `path/_mlog/v%05d` naming a payload dir that holds the full
-  * (file, lo, hi, rows) stats list of exactly the files live at that
-  * version. Readers resolve a
+  * `path/_mlog/v%05d` naming a payload dir that holds one
+  * (file, lo, hi, rows, dv, xs) row per file live at that version:
+  * `lo`/`hi` bound the key column in its own type, `dv` names the
+  * file's deletion vector and `xs` holds one LONG (column, lo, hi)
+  * zone map per clustered axis past the key. Tables written before
+  * the axes shared `xs` read as this shape through the legacy shim
+  * ([[normalizeSnap]]). Readers resolve a
   * snapshot FIRST and read only its file list, never the directory:
   *  - a reader pinned at version N is untouched by later appends AND
   *    by compaction rewrites (old files stay on disk until vacuum);
@@ -132,40 +136,78 @@ object ManifestLog {
         "never written) — the empty pointer has been repaired away; retry the read"))
 
   /** The stats snapshot at `version` (−1 = latest): one row per live
-    * data file, (file, lo, hi, rows, dv). `dv` is the deletion-vector
+    * data file, (file, lo, hi, rows, dv, xs). `dv` is the deletion-vector
     * batch dir holding this file's dead row positions (NULL = none);
-    * payloads written before the MOR-delete era lack the column and
-    * normalize to NULL.
+    * `xs` the file's zone maps on the clustered axes past the key
+    * (NULL on unclustered tables).
     */
   def snapshot(spark: SparkSession, path: String, version: Int = -1): DataFrame = {
     val v = if (version > 0) version else currentVersion(spark, path)
     require(v > 0, s"no snapshots under $path")
-    readPayloadDir(spark, snapshotDir(spark, path, v))
+    readPayloadDir(spark, path, snapshotDir(spark, path, v))
   }
 
   /** Snapshot type of the `xs` column: per-file (column, lo, hi)
-    * zone-map triples for every clustered axis PAST the second —
-    * always LONG bounds (integral clustering columns only, one
-    * canonical manifest type). NULL array or missing entry = unknown
-    * = the pruners keep the file.
+    * zone-map triples for every clustered axis past the key — always
+    * LONG bounds (integral clustering columns only, one canonical
+    * manifest type). NULL array or missing entry = unknown = the
+    * pruners keep the file.
     */
   private[operators] val XsSqlType = "array<struct<c:string,lo:bigint,hi:bigint>>"
 
-  private def normalizeSnap(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    var out = df
+  /** Bring a payload to the one snapshot shape (file, lo, hi, rows,
+    * dv, xs). Payloads written before the MOR-delete era lack `dv` and
+    * unclustered ones may lack `xs`: both normalize to NULL. A table
+    * written before every clustered axis moved into `xs` maps through
+    * [[legacyAxisPayload]], so it reads exactly like a new one.
+    */
+  private def normalizeSnap(spark: SparkSession, path: String, df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    var out = legacyAxisPayload(spark, path, df)
     if (!out.columns.contains("dv"))
       out = out.withColumn("dv", lit(null).cast("string"))
-    // lo2/hi2: per-file stats of the optional SECOND (clustering)
-    // column — always LONG (integral columns only), NULL = unknown
-    // (the pruner keeps the file; see readPruned2)
-    if (!out.columns.contains("lo2"))
-      out = out.withColumn("lo2", lit(null).cast("long"))
-        .withColumn("hi2", lit(null).cast("long"))
-    // xs: third+ clustered axes' triples (Hilbert-3/4 tables)
     if (!out.columns.contains("xs"))
       out = out.withColumn("xs", lit(null).cast(XsSqlType))
-    out.select("file", "lo", "hi", "rows", "dv", "lo2", "hi2", "xs")
+    out.select("file", "lo", "hi", "rows", "dv", "xs")
+  }
+
+  // ---- legacy layout read shim ----
+  //
+  // Tables written before the clustered axes shared one encoding kept
+  // the SECOND axis apart: LONG `lo2`/`hi2` payload columns (on every
+  // payload of that era, NULL unless clustered) and a `statsCol2=` meta
+  // line, with `statsColsX=` naming only the axes after it. Both read
+  // here as the current layout — the second axis becomes the first
+  // `xs` entry — so such a table prunes, appends, compacts and
+  // time-travels like a new one, and its next commit writes the
+  // six-column shape.
+
+  /** The clustered axes past the key, in clustering order, from the
+    * table's meta lines (empty = unclustered).
+    */
+  private def axesOf(lines: Seq[String]): Seq[String] = {
+    def value(k: String) = lines.collectFirst { case l if l.startsWith(k) => l.stripPrefix(k).trim }
+    value("statsCol2=").toSeq ++
+      value("statsColsX=").toSeq.flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
+  }
+
+  /** A legacy payload's `lo2`/`hi2` as its first `xs` entry (a NULL
+    * range stays unknown: no entry). Payloads without the columns pass
+    * through; only legacy ones pay the meta read that names the axis.
+    */
+  private def legacyAxisPayload(spark: SparkSession, path: String, df: DataFrame): DataFrame = {
+    if (!df.columns.contains("lo2")) return df
+    import org.apache.spark.sql.functions._
+    val xs = if (df.columns.contains("xs")) col("xs") else lit(null).cast(XsSqlType)
+    val folded = axesOf(readMetaLines(spark, path)).headOption match {
+      case Some(c2) =>
+        when(col("lo2").isNull, xs).otherwise(concat(
+          array(struct(lit(c2).as("c"), col("lo2").as("lo"), col("hi2").as("hi")))
+            .cast(XsSqlType),
+          coalesce(xs, array().cast(XsSqlType))))
+      case None => xs
+    }
+    df.withColumn("xs", folded).drop("lo2", "hi2")
   }
 
   /** Payload parquet reads — the unit the log-checkpoint design
@@ -175,13 +217,13 @@ object ManifestLog {
     */
   private[operators] val payloadReads = new java.util.concurrent.atomic.AtomicLong
 
-  private def readPayloadDir(spark: SparkSession, dir: String): DataFrame = {
+  private def readPayloadDir(spark: SparkSession, path: String, dir: String): DataFrame = {
     payloadReads.incrementAndGet()
     readPayloadRowsDriver(spark, dir) match {
       case Some((rows, schema)) =>
         import scala.jdk.CollectionConverters._
-        normalizeSnap(spark.createDataFrame(rows.asJava, schema))
-      case None => normalizeSnap(spark.read.parquet(dir))
+        normalizeSnap(spark, path, spark.createDataFrame(rows.asJava, schema))
+      case None => normalizeSnap(spark, path, spark.read.parquet(dir))
     }
   }
 
@@ -398,7 +440,7 @@ object ManifestLog {
   private def headRows(spark: SparkSession, path: String,
                        v: Int): Option[Seq[org.apache.spark.sql.Row]] =
     resolvePayload(spark, path, v).map { dir =>
-      readPayloadDir(spark, dir).collect().toSeq
+      readPayloadDir(spark, path, dir).collect().toSeq
     }
 
   /** Write the snapshot payload, then publish version `v` by the
@@ -604,9 +646,14 @@ object ManifestLog {
       s"table at $path is keyed on '${stored.get}', not '$statsCol'")
   }
 
-  private[operators] def statsOf(spark: SparkSession, files: Seq[String], statsCol: String): DataFrame =
-    footerStats(spark, files, statsCol, None, Seq.empty)
-      .getOrElse(statsOfScan(spark, files, statsCol))
+  /** Snapshot rows for fresh files: the key's typed lo/hi and one LONG
+    * `xs` triple per clustered axis in `xsCols` (empty = `xs` NULL),
+    * all from the ONE pass over the files the writer makes anyway.
+    */
+  private[operators] def statsOf(spark: SparkSession, files: Seq[String], statsCol: String,
+                                 xsCols: Seq[String] = Seq.empty): DataFrame =
+    footerStats(spark, files, statsCol, xsCols)
+      .getOrElse(statsOfScan(spark, files, statsCol, xsCols))
 
   /** The distributed fallback stats pass: re-read the written files
     * and aggregate per file. Only runs when [[footerStats]] cannot
@@ -614,16 +661,19 @@ object ManifestLog {
     * missing statistics) — for the common int/long/string keys the
     * footer path answers without re-reading a data byte.
     */
-  private[operators] def statsOfScan(spark: SparkSession, files: Seq[String], statsCol: String): DataFrame = {
+  private[operators] def statsOfScan(spark: SparkSession, files: Seq[String], statsCol: String,
+                                     xsCols: Seq[String] = Seq.empty): DataFrame = {
     import org.apache.spark.sql.functions._
+    val xs =
+      if (xsCols.isEmpty) lit(null)
+      else array(xsCols.map(c => struct(lit(c).as("c"),
+        min(col(c)).cast("long").as("lo"), max(col(c)).cast("long").as("hi"))): _*)
     spark.read.parquet(files: _*)
       .groupBy(input_file_name().as("file"))
       .agg(min(col(statsCol)).as("lo"), max(col(statsCol)).as("hi"),
-        count(lit(1)).as("rows"))
-      .withColumn("dv", lit(null).cast("string"))
-      .withColumn("lo2", lit(null).cast("long"))
-      .withColumn("hi2", lit(null).cast("long"))
-      .withColumn("xs", lit(null).cast(XsSqlType))
+        count(lit(1)).as("rows"), xs.cast(XsSqlType).as("xs"))
+      .select(col("file"), col("lo"), col("hi"), col("rows"),
+        lit(null).cast("string").as("dv"), col("xs"))
   }
 
   /** Per-file commit stats from parquet FOOTERS — metadata reads on
@@ -645,12 +695,11 @@ object ManifestLog {
     * path would produce (SparkPath.urlEncoded of the listed path), so
     * snapshot rows are byte-identical either way —
     * FooterStatsSpec pins footer rows == scan rows on written tables.
-    * lo2/hi2 and each xs axis read the same way (integral by
-    * construction — initTable/writeClusteredN enforce it).
+    * Each xs axis reads the same way (integral by construction —
+    * initTable/writeClusteredN enforce it).
     */
   private[operators] def footerStats(spark: SparkSession, files: Seq[String],
-                          statsCol: String, statsCol2: Option[String],
-                          xsCols: Seq[String]): Option[DataFrame] = {
+                          statsCol: String, xsCols: Seq[String]): Option[DataFrame] = {
     import org.apache.spark.sql.types._
     if (files.isEmpty) return None
     val conf = spark.sessionState.newHadoopConf()
@@ -735,12 +784,6 @@ object ManifestLog {
       val (lo, hi, dt) = bounds(footer, statsCol).getOrElse(return None)
       if (keyDt == null) keyDt = dt
       else if (keyDt != dt) return None // mixed physical types: let the scan widen
-      val lohi2: (Any, Any) = statsCol2 match {
-        case None => (null, null)
-        case Some(c2) =>
-          val (l2, h2, _) = bounds(footer, c2).getOrElse(return None)
-          (asLongOpt(l2).getOrElse(return None), asLongOpt(h2).getOrElse(return None))
-      }
       val xs: Any =
         if (xsCols.isEmpty) null
         else xsCols.map { c =>
@@ -752,8 +795,7 @@ object ManifestLog {
       // this file — snapshot keys must be form-identical either way
       val fileKey = org.apache.spark.paths.SparkPath
         .fromPath(p.getFileSystem(conf).makeQualified(p)).urlEncoded
-      rowsB += org.apache.spark.sql.Row(
-        fileKey, lo, hi, nRows, null, lohi2._1, lohi2._2, xs)
+      rowsB += org.apache.spark.sql.Row(fileKey, lo, hi, nRows, null, xs)
     }
     val xsDt = DataType.fromDDL(XsSqlType)
     val schema = StructType(Seq(
@@ -762,99 +804,35 @@ object ManifestLog {
       StructField("hi", keyDt),
       StructField("rows", LongType, nullable = false),
       StructField("dv", StringType),
-      StructField("lo2", LongType),
-      StructField("hi2", LongType),
       StructField("xs", xsDt)))
     import scala.jdk.CollectionConverters._
     Some(spark.createDataFrame(rowsB.result().asJava, schema))
   }
 
-  /** The clustering (second stats) column registered for a table, if
-    * any — present exactly on tables created by [[writeClustered]].
-    */
-  private def statsCol2Of(spark: SparkSession, path: String): Option[String] =
-    readMetaLines(spark, path)
-      .collectFirst { case l if l.startsWith("statsCol2=") => l.stripPrefix("statsCol2=").trim }
-
-  /** Clustered axes PAST the second (Hilbert-3/4 tables) — the columns
-    * whose per-file (lo, hi) triples live in the snapshot's `xs`
-    * column. Empty on 1- and 2-axis tables.
-    */
-  private def statsColsXOf(spark: SparkSession, path: String): Seq[String] =
-    readMetaLines(spark, path)
-      .collectFirst { case l if l.startsWith("statsColsX=") =>
-        l.stripPrefix("statsColsX=").split(',').map(_.trim).filter(_.nonEmpty).toSeq }
-      .getOrElse(Seq.empty)
-
-  /** Public face of [[statsColsXOf]] — the SQL face's scan builder
-    * reads it to admit pushed predicates on every clustered axis.
+  /** The clustered axes past the key (empty on unclustered tables) —
+    * the columns whose per-file (lo, hi) triples live in the
+    * snapshot's `xs` column, in clustering order. The SQL face's scan
+    * builder reads it to admit pushed predicates on every axis.
     */
   def statsColumnsX(spark: SparkSession, path: String): Seq[String] =
-    statsColsXOf(spark, path)
+    axesOf(readMetaLines(spark, path))
 
-  /** Fresh-file stats for a REWRITE (compact/merge/COW delete): on a
-    * clustered table the rewriter has the rows in hand anyway, so it
-    * computes BOTH columns' lo/hi — second-dimension pruning survives
-    * maintenance instead of degrading to NULL (= kept-never-skipped)
-    * until a full re-clustering write. Falls back to primary-only
-    * stats when the table isn't clustered or the rewrite output lacks
-    * the column (a schema-evolution edge — NULL stays the safe
-    * unknown).
+  /** Fresh-file stats for a write into an existing table: on a
+    * clustered table the writer has the rows in hand anyway, so it
+    * computes every axis's lo/hi — pruning on the clustered axes
+    * survives maintenance instead of degrading to no entry (=
+    * kept-never-skipped) until a full re-clustering write. An axis the
+    * output lacks (a schema-evolution edge) gets no entry — unknown
+    * stays the safe answer.
     */
   private[operators] def statsOfRewrite(spark: SparkSession, path: String,
-                             files: Seq[String], statsCol: String): DataFrame =
-    statsCol2Of(spark, path) match {
-      case Some(c2) =>
-        // one schema-inference pass for both column probes
-        val cols = spark.read.parquet(files: _*).columns
-        if (cols.contains(c2))
-          statsOfN(spark, files, statsCol, c2,
-            statsColsXOf(spark, path).filter(cols.contains))
-        else statsOf(spark, files, statsCol)
-      case _ => statsOf(spark, files, statsCol)
+                             files: Seq[String], statsCol: String): DataFrame = {
+    val axes = statsColumnsX(spark, path)
+    if (axes.isEmpty) statsOf(spark, files, statsCol)
+    else {
+      val cols = spark.read.parquet(files: _*).columns
+      statsOf(spark, files, statsCol, axes.filter(cols.contains))
     }
-
-  /** Two-column stats: the primary lo/hi plus LONG lo2/hi2 for the
-    * clustering column (integral columns only — one canonical manifest
-    * type keeps every commit's snapshot schema stable).
-    */
-  private def statsOf2(spark: SparkSession, files: Seq[String],
-                       statsCol: String, statsCol2: String): DataFrame =
-    statsOfN(spark, files, statsCol, statsCol2, Seq.empty)
-
-  /** N-column stats: primary lo/hi, LONG lo2/hi2 for the second axis,
-    * and one (col, lo, hi) triple per FURTHER clustered axis in `xs` —
-    * all from the ONE pass over the fresh files the writer makes
-    * anyway. Empty `xsCols` keeps `xs` NULL (the 2-axis shape,
-    * byte-compatible with every pre-xs snapshot consumer).
-    */
-  private[operators] def statsOfN(spark: SparkSession, files: Seq[String],
-                       statsCol: String, statsCol2: String,
-                       xsCols: Seq[String]): DataFrame =
-    footerStats(spark, files, statsCol, Some(statsCol2), xsCols)
-      .getOrElse(statsOfNScan(spark, files, statsCol, statsCol2, xsCols))
-
-  private[operators] def statsOfNScan(spark: SparkSession, files: Seq[String],
-                           statsCol: String, statsCol2: String,
-                           xsCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val base = spark.read.parquet(files: _*)
-      .groupBy(input_file_name().as("file"))
-    val head = Seq(min(col(statsCol)).as("lo"), max(col(statsCol)).as("hi"),
-      count(lit(1)).as("rows"),
-      min(col(statsCol2)).cast("long").as("lo2"),
-      max(col(statsCol2)).cast("long").as("hi2"))
-    val agged =
-      if (xsCols.isEmpty)
-        base.agg(head.head, head.tail: _*)
-          .withColumn("xs", lit(null).cast(XsSqlType))
-      else base.agg(head.head, head.tail :+
-        array(xsCols.map(c => struct(lit(c).as("c"),
-          min(col(c)).cast("long").as("lo"),
-          max(col(c)).cast("long").as("hi"))): _*).as("xs"): _*)
-    agged
-      .withColumn("dv", lit(null).cast("string"))
-      .select("file", "lo", "hi", "rows", "dv", "lo2", "hi2", "xs")
   }
 
   // ---- schema evolution: add-column AND type widening ----
@@ -1058,35 +1036,20 @@ object ManifestLog {
       s"concurrent initial write at $path")
   }
 
-  /** Initial load CLUSTERED on the Hilbert curve of
-    * (statsCol, statsCol2) — MULTI-DIMENSIONAL data skipping under
-    * the versioned log (Delta's Z-order + file-stats shape, on the
-    * better curve): the Hilbert order gives BOTH columns tight
-    * per-file ranges, the manifest records lo/hi for the primary and
-    * LONG lo2/hi2 for the second, and [[readPruned2]] skips files on
-    * either predicate before Spark ever lists them. The primary
-    * statsCol still routes merge/delete — range overlap stays CORRECT
-    * under any layout, clustering only trades its selectivity for the
-    * second dimension's. Rewrites (compact/merge/COW delete) compute
-    * BOTH columns' stats for their fresh files (the rows are in hand
-    * anyway — see [[statsOfRewrite]]), so second-dimension pruning
-    * survives maintenance; compaction additionally re-clusters on the
-    * Hilbert curve. A NULL col2 range (schema-evolution edge) is KEPT
-    * by the pruner, never skipped. statsCol2 must be an
-    * integral column (one canonical LONG manifest type).
-    */
-  def writeClustered(df: DataFrame, statsCol: String, statsCol2: String,
-                     path: String, files: Int = 32): Unit =
-    writeClusteredN(df, Seq(statsCol, statsCol2), path, files)
-
-  /** Initial load clustered on the Hilbert curve of 2–4 axes, with a
-    * zone-map dimension in the manifest for EVERY axis: the primary
-    * keeps its typed lo/hi (it still routes merge/delete), the second
-    * its LONG lo2/hi2, and each further axis a (col, lo, hi) triple in
-    * the snapshot's `xs` column — so a Hilbert-3/4 clustered table
-    * file-skips on any clustered predicate through BOTH read paths
-    * ([[readPrunedN]] and the SQL face's pushed filters), not just the
-    * first two. All axes past the first must be integral.
+  /** Initial load clustered on the Hilbert curve of 2–4 axes —
+    * MULTI-DIMENSIONAL data skipping under the versioned log (Delta's
+    * Z-order + file-stats shape, on the better curve): the Hilbert
+    * order gives every axis tight per-file ranges, and the manifest
+    * records a zone map for each — the key keeps its typed lo/hi (it
+    * still routes merge/delete; range overlap stays CORRECT under any
+    * layout, clustering only trades its selectivity for the other
+    * axes'), every further axis one LONG (col, lo, hi) triple in the
+    * snapshot's `xs` column. A clustered predicate then file-skips
+    * through BOTH read paths ([[readPrunedN]] and the SQL face's pushed
+    * filters). Rewrites (compact/merge/COW delete) compute every axis's
+    * stats for their fresh files ([[statsOfRewrite]]) and compaction
+    * re-clusters on the full axis list, so pruning survives
+    * maintenance. All axes past the first must be integral.
     */
   def writeClusteredN(df: DataFrame, statsCols: Seq[String],
                       path: String, files: Int = 32): Unit = {
@@ -1100,35 +1063,29 @@ object ManifestLog {
       .sortWithinPartitions("__h")
       .drop("__h")
       .write.mode("overwrite").parquet(path)
-    writeMeta(spark, path, statsCols.head)
-    val extra = s"statsCol2=${statsCols(1)}" +:
-      (if (statsCols.size > 2) Seq(s"statsColsX=${statsCols.drop(2).mkString(",")}")
-       else Seq.empty)
-    writeMetaLines(spark, path, readMetaLines(spark, path) ++ extra)
-    val st = statsOfN(spark, listDataFiles(spark, path).toSeq.sorted,
-      statsCols.head, statsCols(1), statsCols.drop(2))
+    writeMetaLines(spark, path,
+      Seq(s"statsCol=${statsCols.head}", s"statsColsX=${statsCols.tail.mkString(",")}"))
+    val st = statsOf(spark, listDataFiles(spark, path).toSeq.sorted,
+      statsCols.head, statsCols.tail)
     require(tryCommit(spark, path, 1, st.collect().toSeq, st.schema),
       s"concurrent initial write at $path")
   }
 
   /** Append a batch to a CLUSTERED table: the batch itself is
     * Hilbert-ordered (its own value ranges — local clustering, the
-    * daily-crawl shape) and lands with BOTH columns' stats; commits
+    * daily-crawl shape) and lands with every axis's stats; commits
     * compose exactly like [[append]].
     */
   def appendClustered(df: DataFrame, path: String, files: Int = 8): Unit = {
     import org.apache.spark.sql.functions._
     val spark = df.sparkSession
     require(currentVersion(spark, path) > 0, s"appendClustered before write at $path")
-    val statsCol = readMetaLines(spark, path)
-      .collectFirst { case l if l.startsWith("statsCol=") => l.stripPrefix("statsCol=").trim }
+    val statsCol = statsColumn(spark, path)
       .getOrElse(sys.error(s"no statsCol meta at $path"))
-    val statsCol2 = readMetaLines(spark, path)
-      .collectFirst { case l if l.startsWith("statsCol2=") => l.stripPrefix("statsCol2=").trim }
-      .getOrElse(sys.error(s"$path is not a clustered table (no statsCol2 meta)"))
-    val xsCols = statsColsXOf(spark, path)
+    val axes = statsColumnsX(spark, path)
+    require(axes.nonEmpty, s"$path is not a clustered table (no clustered axes in its meta)")
     val batchDir = newBatchDir(path)
-    df.withColumn("__h", LayoutOps.hilbertValueN(df, statsCol +: statsCol2 +: xsCols))
+    df.withColumn("__h", LayoutOps.hilbertValueN(df, statsCol +: axes))
       .repartitionByRange(files, col("__h"))
       .sortWithinPartitions("__h")
       .drop("__h")
@@ -1139,7 +1096,7 @@ object ManifestLog {
       fs(spark, path).delete(new org.apache.hadoop.fs.Path(batchDir), true)
       throw e
     }
-    val st = statsOfN(spark, fresh, statsCol, statsCol2, xsCols)
+    val st = statsOf(spark, fresh, statsCol, axes)
     val freshRows = st.collect().toSeq
     var committed = false
     while (!committed) {
@@ -1152,72 +1109,25 @@ object ManifestLog {
     }
   }
 
-  /** Two-predicate pruned scan at a version: a file survives iff its
-    * primary range overlaps [lo, hi] AND its col2 range overlaps
-    * [lo2, hi2] — where NULL col2 stats (a rewritten file) always
-    * survive (unknown = keep, never skip). Residual filters on top;
-    * deletion vectors applied. Returns (frame, survivors, total).
-    */
-  def readPruned2(spark: SparkSession, path: String,
-                  statsCol: String, lo: Any, hi: Any,
-                  statsCol2: String, lo2: Long, hi2: Long,
-                  version: Int = -1): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val snap = snapshot(spark, path, version).collect()
-    val survivors = snap.filter { r =>
-      val ok1 = cmp(r.get(2), lo) >= 0 && cmp(r.get(1), hi) <= 0
-      val ok2 = r.isNullAt(5) || (r.getLong(6) >= lo2 && r.getLong(5) <= hi2)
-      ok1 && ok2
-    }.sortBy(_.getString(0)).toSeq
-    val df =
-      if (survivors.isEmpty)
-        readAligned(spark, snap.map(_.getString(0)).toSeq)
-          .filter(lit(false))
-      else readWithDv(spark, survivors.map(r => (r.getString(0), r.getString(4))))
-        .filter(col(statsCol).between(lit(lo), lit(hi)) &&
-          col(statsCol2).between(lit(lo2), lit(hi2)))
-    (df, survivors.size, snap.length)
-  }
-
-  /** N-predicate pruned scan: a file survives iff EVERY (column, lo,
-    * hi) predicate's zone-map range overlaps — the primary via its
-    * typed lo/hi, the second axis via lo2/hi2, any further clustered
-    * axis via its `xs` triple. Unknown stats (NULL range, missing xs
-    * entry, a column with no zone map at all) always KEEP the file —
-    * pruning only shrinks the list, correctness never depends on it.
-    * Residual filters apply on top; DVs applied. Returns
+  /** N-predicate pruned scan at a version: a file survives iff EVERY
+    * (column, lo, hi) predicate's range overlaps its zone map
+    * ([[fileMayMatch]]: the key via its typed lo/hi, any clustered axis
+    * via its `xs` triple; unknown stats keep the file). Residual
+    * filters apply on top; DVs applied. Returns
     * (frame, survivors, total).
     */
   def readPrunedN(spark: SparkSession, path: String,
                   preds: Seq[(String, Any, Any)],
                   version: Int = -1): (DataFrame, Int, Int) = {
     import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
     require(preds.nonEmpty, "readPrunedN needs at least one predicate")
     val key = statsColumn(spark, path)
-    val key2 = statsCol2Of(spark, path)
-    def asLong(v: Any): Long = v match {
-      case l: Long => l
-      case i: Int => i.toLong
-      case n: Number => n.longValue()
-      case other => throw new IllegalArgumentException(
-        s"clustered-axis bounds must be integral, got $other")
-    }
+    val filters = preds.flatMap { case (c, lo, hi) =>
+      Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi)) }
     val snap = snapshot(spark, path, version).collect()
-    def xsOf(r: org.apache.spark.sql.Row): Map[String, (Long, Long)] =
-      if (r.isNullAt(7)) Map.empty
-      else r.getSeq[org.apache.spark.sql.Row](7)
-        .map(e => e.getString(0) -> (e.getLong(1), e.getLong(2))).toMap
-    val survivors = snap.filter { r =>
-      preds.forall { case (c, lo, hi) =>
-        if (key.contains(c))
-          cmp(r.get(2), lo) >= 0 && cmp(r.get(1), hi) <= 0
-        else if (key2.contains(c))
-          r.isNullAt(5) || (r.getLong(6) >= asLong(lo) && r.getLong(5) <= asLong(hi))
-        else xsOf(r).get(c).forall { case (flo, fhi) =>
-          fhi >= asLong(lo) && flo <= asLong(hi)
-        }
-      }
-    }.sortBy(_.getString(0)).toSeq
+    val survivors = snap.filter(r => fileMayMatch(r, key, filters))
+      .sortBy(_.getString(0)).toSeq
     val residual = preds.map { case (c, lo, hi) =>
       col(c).between(lit(lo), lit(hi))
     }.reduce(_ && _)
@@ -1228,6 +1138,43 @@ object ManifestLog {
       else readWithDv(spark, survivors.map(r => (r.getString(0), r.getString(4))))
         .filter(residual)
     (df, survivors.size, snap.length)
+  }
+
+  /** THE zone-map rule: may the file a snapshot row describes hold a
+    * row that passes every filter (each on one column)? The key's
+    * bounds are the row's typed lo/hi, any other clustered axis's its
+    * `xs` triple. Unknown stats — NULL bounds, no `xs` entry, a column
+    * with no zone map, an incomparable literal — keep the file:
+    * pruning only shrinks the file list, correctness never depends on
+    * it. Every pruned read decides here: [[readPrunedAt]],
+    * [[readPrunedN]] and the SQL face's pushed filters.
+    */
+  private[graft] def fileMayMatch(r: org.apache.spark.sql.Row, key: Option[String],
+                                  filters: Seq[org.apache.spark.sql.sources.Filter]): Boolean = {
+    import org.apache.spark.sql.sources._
+    lazy val xs: Map[String, (Any, Any)] =
+      if (r.isNullAt(5)) Map.empty
+      else r.getSeq[org.apache.spark.sql.Row](5)
+        .map(e => e.getString(0) -> (e.get(1), e.get(2))).toMap
+    // each comparison is consumed through forall: an incomparable
+    // pair (None) keeps the file on every arm
+    def atMost(a: Any, v: Any) = cmpOpt(a, v).forall(_ <= 0)
+    def atLeast(a: Any, v: Any) = cmpOpt(a, v).forall(_ >= 0)
+    filters.forall { f =>
+      val c = f.references.head
+      val bounds = if (key.contains(c)) Some((r.get(1), r.get(2))) else xs.get(c)
+      bounds.forall { case (lo, hi) =>
+        lo == null || hi == null || (f match {
+          case EqualTo(_, v)            => atLeast(hi, v) && atMost(lo, v)
+          case In(_, vs)                => vs.exists(v => atLeast(hi, v) && atMost(lo, v))
+          case GreaterThan(_, v)        => cmpOpt(hi, v).forall(_ > 0)
+          case GreaterThanOrEqual(_, v) => atLeast(hi, v)
+          case LessThan(_, v)           => cmpOpt(lo, v).forall(_ < 0)
+          case LessThanOrEqual(_, v)    => atMost(lo, v)
+          case _                        => true
+        })
+      }
+    }
   }
 
   /** Append a batch: new data files + snapshot v+1 = old ∪ new. A
@@ -1408,7 +1355,7 @@ object ManifestLog {
 
   /** The DDL-declared clustering axes of a created-but-still-empty
     * table (empty once data lands — the clustering then lives in
-    * statsCol2/statsColsX meta written by [[writeClusteredN]]).
+    * the axis list [[writeClusteredN]] writes).
     */
   def ddlStatsCols(spark: SparkSession, path: String): Seq[String] =
     readMetaLines(spark, path).collectFirst {
@@ -1433,15 +1380,6 @@ object ManifestLog {
   def statsColumn(spark: SparkSession, path: String): Option[String] =
     readMetaLines(spark, path).collectFirst {
       case l if l.startsWith("statsCol=") => l.stripPrefix("statsCol=").trim
-    }
-
-  /** The second (Hilbert-clustering) stats column, when the table was
-    * written with [[writeClustered]] — the other zone-map dimension
-    * the SQL face can skip files on.
-    */
-  def statsColumn2(spark: SparkSession, path: String): Option[String] =
-    readMetaLines(spark, path).collectFirst {
-      case l if l.startsWith("statsCol2=") => l.stripPrefix("statsCol2=").trim
     }
 
   /** REPLACE the table's contents as a NEW VERSION (Delta's
@@ -1506,22 +1444,21 @@ object ManifestLog {
     val nOut = math.max(1L, (total + targetRows - 1) / targetRows).toInt
     val batchDir = newBatchDir(path)
     val out = readWithDv(spark, small.map(r => (r.getString(0), r.getString(4))))
-    // compacting a CLUSTERED table re-clusters on the Hilbert curve —
-    // the rewrite pays the pass anyway, so maintenance RESTORES
-    // two-dimensional locality instead of eroding it to a single-key
-    // layout (primary lo/hi pruning is correct under any order)
-    statsCol2Of(spark, path) match {
-      case Some(c2) if out.columns.contains(c2) =>
-        out.withColumn("__h", LayoutOps.hilbertValueN(out, Seq(statsCol, c2)))
-          .repartitionByRange(nOut, col("__h"))
-          .sortWithinPartitions("__h")
-          .drop("__h")
-          .write.parquet(batchDir)
-      case _ =>
-        out.repartitionByRange(nOut, col(statsCol))
-          .sortWithinPartitions(statsCol)
-          .write.parquet(batchDir)
-    }
+    // compacting a CLUSTERED table re-clusters on the Hilbert curve of
+    // EVERY axis — the rewrite pays the pass anyway, so maintenance
+    // RESTORES multi-dimensional locality instead of eroding it to a
+    // single-key layout (key lo/hi pruning is correct under any order)
+    val axes = statsColumnsX(spark, path).filter(out.columns.contains)
+    if (axes.nonEmpty)
+      out.withColumn("__h", LayoutOps.hilbertValueN(out, statsCol +: axes))
+        .repartitionByRange(nOut, col("__h"))
+        .sortWithinPartitions("__h")
+        .drop("__h")
+        .write.parquet(batchDir)
+    else
+      out.repartitionByRange(nOut, col(statsCol))
+        .sortWithinPartitions(statsCol)
+        .write.parquet(batchDir)
     val fresh = listDataFiles(spark, batchDir).toSeq.sorted
     val st = statsOfRewrite(spark, path, fresh, statsCol)
     val freshRows = st.collect().toSeq
@@ -2286,38 +2223,30 @@ object ManifestLog {
     } else frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
   }
 
-  /** Scan `statsCol ∈ [lo, hi]` AT a version (−1 = latest): zone-map
-    * pruning inside the snapshot's file list, residual filter on top —
-    * results equal a plain scan of exactly that version's files.
-    * Returns (frame, surviving files, total files in the snapshot).
+  /** Scan `statsCol ∈ [lo, hi]` AT a version (−1 = latest): the
+    * one-predicate [[readPrunedN]] — zone-map pruning inside the
+    * snapshot's file list, residual filter on top, so results equal a
+    * plain scan of exactly that version's files. Returns (frame,
+    * surviving files, total files in the snapshot).
     */
   def readPrunedAt(spark: SparkSession, path: String, statsCol: String,
-                   lo: Any, hi: Any, version: Int = -1): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val snap = snapshot(spark, path, version).collect()
-    val survivors = snap.filter { r =>
-      val flo = r.get(1); val fhi = r.get(2)
-      cmp(fhi, lo) >= 0 && cmp(flo, hi) <= 0
-    }.sortBy(_.getString(0)).toSeq
-    val df =
-      if (survivors.isEmpty)
-        readAligned(spark, snap.map(_.getString(0)).toSeq)
-          .filter(lit(false))
-      else readWithDv(spark, survivors.map(r => (r.getString(0), r.getString(4))))
-        .filter(col(statsCol).between(lit(lo), lit(hi)))
-    (df, survivors.size, snap.length)
-  }
+                   lo: Any, hi: Any, version: Int = -1): (DataFrame, Int, Int) =
+    readPrunedN(spark, path, Seq((statsCol, lo, hi)), version)
 
-  private def cmp(a: Any, b: Any): Int = (a, b) match {
-    case (x: Long, y: Long)     => java.lang.Long.compare(x, y)
-    case (x: Int, y: Int)       => Integer.compare(x, y)
-    case (x: Number, y: Number) => java.lang.Double.compare(x.doubleValue(), y.doubleValue())
+  /** Order of two manifest bounds (None = incomparable). */
+  private def cmpOpt(a: Any, b: Any): Option[Int] = (a, b) match {
+    case (x: Long, y: Long)     => Some(java.lang.Long.compare(x, y))
+    case (x: Int, y: Int)       => Some(Integer.compare(x, y))
+    case (x: Number, y: Number) => Some(java.lang.Double.compare(x.doubleValue(), y.doubleValue()))
     // same UTF-8 binary order as the engine's string comparisons —
     // these bounds drive file pruning against predicates the scan
     // evaluates in UTF8String order, so the two must agree exactly
-    case (x: String, y: String) => utf8Cmp(x, y)
-    case _ => throw new IllegalArgumentException(s"incomparable manifest bounds: $a vs $b")
+    case (x: String, y: String) => Some(utf8Cmp(x, y))
+    case _ => None
   }
+
+  private def cmp(a: Any, b: Any): Int = cmpOpt(a, b).getOrElse(
+    throw new IllegalArgumentException(s"incomparable manifest bounds: $a vs $b"))
 
   /** Unsigned lexicographic comparison of the UTF-8 encodings — the
     * exact order Spark's UTF8String (and parquet's binary stats)
@@ -2773,8 +2702,8 @@ object ManifestLog {
       import scala.jdk.CollectionConverters._
       readPayloadRowsDriver(spark, dir) match {
         case Some((rows, schema)) =>
-          normalizeSnap(spark.createDataFrame(rows.asJava, schema)).collect()
-        case None => normalizeSnap(spark.read.parquet(dir)).collect()
+          normalizeSnap(spark, path, spark.createDataFrame(rows.asJava, schema)).collect()
+        case None => normalizeSnap(spark, path, spark.read.parquet(dir)).collect()
       }
     }
     val live: Set[String] = keepSnaps.flatten.map(_.getString(0)).toSet

@@ -221,20 +221,6 @@ object ManifestBatchSource {
     }
   }
 
-  /** Widening comparison between a manifest bound and a filter
-    * literal (same lattice as the manifest's own pruners). None =
-    * incomparable — the CALLER must keep the file (encoding "unknown"
-    * as an integer would silently satisfy one strict-inequality arm
-    * and skip a live file the moment the literal lattice widens).
-    */
-  private[sources] def cmpA(a: Any, b: Any): Option[Int] = (a, b) match {
-    case (x: java.lang.Long, y: java.lang.Long)       => Some(java.lang.Long.compare(x, y))
-    case (x: java.lang.Integer, y: java.lang.Integer) => Some(Integer.compare(x, y))
-    case (x: Number, y: Number) => Some(java.lang.Double.compare(x.doubleValue(), y.doubleValue()))
-    case (x: String, y: String) => Some(x.compareTo(y))
-    case _ => None
-  }
-
   /** Test-visible counters for the executor-side DV probe: part files
     * actually opened for a data read vs skipped on footer stats alone
     * (the payloadReads discipline — specs pin that a narrow probe
@@ -368,7 +354,7 @@ private[sources] class ManifestBatchTable(path: String, version: Int,
                   ManifestLog.writeClusteredN(data, axes, path, filesOpt.getOrElse(32))
                 else
                   ManifestLog.write(data, sc, path, filesOpt.getOrElse(32))
-              } else if (ManifestLog.statsColumn2(spark, path).isDefined)
+              } else if (ManifestLog.statsColumnsX(spark, path).nonEmpty)
                 // appends into a clustered table keep the layout: the
                 // batch Hilbert-orders over ALL registered axes and
                 // lands with fresh per-axis stats
@@ -478,9 +464,9 @@ private[sources] class ManifestStreamSink(path: String,
   *     by name (schema-evolution-safe), so a 2-column SELECT never
   *     decodes the other column chunks;
   *   - FILE SKIPPING ([[org.apache.spark.sql.connector.read.SupportsPushDownFilters]]):
-  *     range/equality predicates on the table's stats column prune
-  *     whole files against the snapshot's per-file lo/hi BEFORE any
-  *     partition is planned — the manifest zone maps surfacing
+  *     range/equality predicates on the table's key or any clustered
+  *     axis prune whole files against the snapshot's zone maps BEFORE
+  *     any partition is planned — the manifest zone maps surfacing
   *     through `spark.read`/SQL exactly like the Scala
   *     [[ManifestLog.readPrunedAt]]. Every filter stays residual
   *     (Spark still evaluates rows); pruning only shrinks the file
@@ -497,9 +483,8 @@ private[sources] class ManifestBatchScanBuilder(path: String, version: Int,
   import org.apache.spark.sql.sources._
 
   private var required: StructType = full
-  private var keyFilters: Array[Filter] = Array.empty
-  private var key2Filters: Array[Filter] = Array.empty
-  private var xsFilters: Array[(String, Filter)] = Array.empty
+  private var key: Option[String] = None
+  private var pushed: Array[Filter] = Array.empty
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = StructType(
@@ -507,34 +492,21 @@ private[sources] class ManifestBatchScanBuilder(path: String, version: Int,
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val spark = SparkSession.active
-    val key = ManifestLog.statsColumn(spark, path)
-    keyFilters = key
-      .map(k => filters.filter(f => ManifestBatchSource.isKeyRangeFilter(f, k)))
-      .getOrElse(Array.empty)
-    // clustered tables carry a SECOND zone-map dimension (lo2/hi2) —
-    // predicates on it skip files too (readPruned2's rule: a NULL
-    // range survives, never skips)
-    val key2 = ManifestLog.statsColumn2(spark, path)
-    key2Filters = key2
-      .map(k => filters.filter(f => ManifestBatchSource.isKeyRangeFilter(f, k)))
-      .getOrElse(Array.empty)
-    // Hilbert-3/4 tables carry a triple per FURTHER axis in `xs` —
-    // every clustered predicate file-skips, not just the first two
-    xsFilters = ManifestLog.statsColumnsX(spark, path).toArray.flatMap { c =>
-      filters.filter(f => ManifestBatchSource.isKeyRangeFilter(f, c))
-        .map(c -> _)
-    }
+    key = ManifestLog.statsColumn(spark, path)
+    // the key and every clustered axis carry a zone map — predicates
+    // on any of them skip files
+    val zoned = key.toSeq ++ ManifestLog.statsColumnsX(spark, path)
+    pushed = filters.filter(f =>
+      zoned.exists(c => ManifestBatchSource.isKeyRangeFilter(f, c)))
     filters // all residual — file skipping only, rows still filtered by Spark
   }
 
-  override def pushedFilters(): Array[Filter] =
-    keyFilters ++ key2Filters ++ xsFilters.map(_._2)
+  override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan = new Scan {
     override def readSchema(): StructType = required
     override def toBatch: Batch =
-      new ManifestBatchScan(path, version, required, keyFilters, key2Filters,
-        xsFilters)
+      new ManifestBatchScan(path, version, required, key, pushed)
     /** `spark.readStream.table("graft.t")` / `.format(manifest)`:
       * the SAME version-offset MicroBatchStream as the follow face
       * (one partition per appended file; follow-face options —
@@ -557,36 +529,17 @@ private[sources] class ManifestBatchScanBuilder(path: String, version: Int,
     // surfaced in explain/plan strings so zone-map file skipping is
     // discoverable, not silent
     override def description(): String =
-      s"manifest($path@v$version) PushedFilters: [${(keyFilters ++ key2Filters ++ xsFilters.map(_._2)).mkString(", ")}]"
+      s"manifest($path@v$version) PushedFilters: [${pushed.mkString(", ")}]"
   }
 }
 
 private[sources] class ManifestBatchScan(path: String, version: Int,
                                          schema0: StructType,
-                                         keyFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-                                         key2Filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-                                         xsFilters: Array[(String, org.apache.spark.sql.sources.Filter)] = Array.empty)
+                                         key: Option[String] = None,
+                                         pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends Batch {
-  import org.apache.spark.sql.sources._
 
   private def spark = SparkSession.active
-
-  // every cmpA is consumed through forall, so an incomparable pair
-  // (None) reads as "survives" on EVERY arm — a file is only ever
-  // skipped on a PROVEN comparison
-  private def rangeSurvives(lo: Any, hi: Any, fs: Array[Filter]): Boolean =
-    lo == null || hi == null || fs.forall {
-      case EqualTo(_, v)            => ManifestBatchSource.cmpA(hi, v).forall(_ >= 0) &&
-                                       ManifestBatchSource.cmpA(lo, v).forall(_ <= 0)
-      case In(_, vs)                => vs.exists(v =>
-                                         ManifestBatchSource.cmpA(hi, v).forall(_ >= 0) &&
-                                         ManifestBatchSource.cmpA(lo, v).forall(_ <= 0))
-      case GreaterThan(_, v)        => ManifestBatchSource.cmpA(hi, v).forall(_ > 0)
-      case GreaterThanOrEqual(_, v) => ManifestBatchSource.cmpA(hi, v).forall(_ >= 0)
-      case LessThan(_, v)           => ManifestBatchSource.cmpA(lo, v).forall(_ < 0)
-      case LessThanOrEqual(_, v)    => ManifestBatchSource.cmpA(lo, v).forall(_ <= 0)
-      case _                        => true
-    }
 
   override def planInputPartitions(): Array[InputPartition] = {
     // a CREATE TABLE'd but never-written table has no snapshot yet
@@ -594,25 +547,10 @@ private[sources] class ManifestBatchScan(path: String, version: Int,
       ManifestBatchSource.lastPlannedFiles.set(0)
       return Array.empty
     }
-    val snap = ManifestLog.snapshot(spark, path, version).collect()
-    val kept = snap.filter { r =>
-      // xs: (col, lo, hi) triples of the 3rd+ clustered axes; a NULL
-      // array or a missing entry keeps the file (unknown, never skip)
-      val xs: Map[String, (Long, Long)] =
-        if (r.isNullAt(7)) Map.empty
-        else r.getSeq[org.apache.spark.sql.Row](7)
-          .map(e => e.getString(0) -> (e.getLong(1), e.getLong(2))).toMap
-      rangeSurvives(r.get(1), r.get(2), keyFilters) &&
-        rangeSurvives(if (r.isNullAt(5)) null else r.getLong(5),
-          if (r.isNullAt(6)) null else r.getLong(6), key2Filters) &&
-        xsFilters.groupBy(_._1).forall { case (c, fs) =>
-          xs.get(c).forall { case (flo, fhi) =>
-            rangeSurvives(flo, fhi, fs.map(_._2))
-          }
-        }
-    }
+    val kept = ManifestLog.snapshot(spark, path, version).collect()
+      .filter(r => ManifestLog.fileMayMatch(r, key, pushed.toSeq))
     ManifestBatchSource.lastPlannedFiles.set(kept.length)
-    kept.map(r => ManifestBatchPartition(r.getString(0), r.getString(4),
+    kept.map(r => ManifestBatchPartition(r.getAs[String]("file"), r.getAs[String]("dv"),
       schema0.json): InputPartition)
   }
 

@@ -144,37 +144,37 @@ class SimilaritySpec extends AnyFunSuite {
     assert(qBase == qWide, "wide fixture changed the exact neighbor structure")
     // multi-word recall floor vs the wide brute force
     val brute = qWide.map(r => (r.getLong(0), r.getLong(2)))
-    val bq = Similarity.binaryTopKN(wide, 5, 256, 10)
+    val bq = Similarity.binaryTopK(wide, 5, 256, 10)
       .select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = brute.intersect(bq).size.toDouble / brute.size
     assert(recall >= 0.7, s"wide binary-code recall too low: $recall")
     // deterministic; salted two-level top-C exact at any salt count
-    assert(Similarity.binaryTopKN(wide, 5, 256, 10).collect().toSeq ==
-      Similarity.binaryTopKN(wide, 5, 256, 10).collect().toSeq)
-    assert(Similarity.binaryTopKN(wide, 5, 256, 10, salts = 1).collect().toSeq ==
-      Similarity.binaryTopKN(wide, 5, 256, 10, salts = 32).collect().toSeq)
+    assert(Similarity.binaryTopK(wide, 5, 256, 10).collect().toSeq ==
+      Similarity.binaryTopK(wide, 5, 256, 10).collect().toSeq)
+    assert(Similarity.binaryTopK(wide, 5, 256, 10, salts = 1).collect().toSeq ==
+      Similarity.binaryTopK(wide, 5, 256, 10, salts = 32).collect().toSeq)
     // assign-only append == one-shot under fixed anchors (multi-word)
     val corpus = wide.filter(col("vec_id") % 10 >= 3)
     val batch = wide.filter(col("vec_id") % 10 < 3)
     val anchors = Similarity.binaryAnchors(corpus, 256)
     assert(anchors.length == 256)
-    val inc = Similarity.binaryAssignN(corpus, anchors)
-      .unionAll(Similarity.binaryAssignN(batch, anchors))
-    val one = Similarity.binaryAssignN(wide, anchors)
-    val pInc = Similarity.binaryProbeN(inc, wide, batch, anchors, 5).collect().toSeq
-    val pOne = Similarity.binaryProbeN(one, wide, batch, anchors, 5).collect().toSeq
+    val inc = Similarity.binaryAssign(corpus, anchors)
+      .unionAll(Similarity.binaryAssign(batch, anchors))
+    val one = Similarity.binaryAssign(wide, anchors)
+    val pInc = Similarity.binaryProbe(inc, wide, batch, anchors, 5).collect().toSeq
+    val pOne = Similarity.binaryProbe(one, wide, batch, anchors, 5).collect().toSeq
     assert(pInc == pOne && pInc.nonEmpty,
       "appended multi-word code table diverged from one-shot assignment")
-    // the one-long tier IS the <=64-dim special case: at dim 64 the
-    // N-path's single-word codes rank identically to binaryTopK
-    assert(Similarity.binaryTopKN(base, 5, 64, 10).collect().toSeq ==
-      Similarity.binaryTopK(base, 5, 64, 10).collect().toSeq,
-      "binaryTopKN diverged from binaryTopK at dim 64")
+    // the <=64-dim case is the one-word code: word 0 is SignPack's
+    // long (pinned above), so a 64-dim corpus ranks as it did on the
+    // one-long path
+    assert(Similarity.binaryAssign(base, Similarity.binaryAnchors(base, 64))
+      .select(size(col("code"))).distinct().collect().map(_.getInt(0)).toSeq == Seq(1))
   }
 
   test("wide binary prefilter is codes-only: no top-C stage touches the float vectors") {
     val wide = graft.operators.AnnQueries.wideEmbeddings(spark, dir)
-    val plan = Similarity.binaryTopKN(wide, 5, 256, 10)
+    val plan = Similarity.binaryTopK(wide, 5, 256, 10)
       .queryExecution.optimizedPlan
     val windows = plan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The commit stats pass's footer fast path must be ROW-IDENTICAL to
   * the distributed scan it replaces — same file-key strings (the
   * `input_file_name()` form every DV/rewrite comparison keys on),
-  * same typed lo/hi, same row counts, same lo2/hi2/xs — on int, long
+  * same typed lo/hi, same row counts, same xs — on int, long
   * and string keys, across multi-file and clustered layouts, and it
   * must REFUSE (fall back) on types whose footer stats cannot prove
   * exact bounds (float/double: NaN poisons the stats contract).
@@ -39,7 +39,7 @@ class FooterStatsSpec extends AnyFunSuite {
     li.repartitionByRange(4, col("l_orderkey")).sortWithinPartitions("l_orderkey")
       .write.parquet(dir)
     val files = writtenFiles(dir)
-    val foot = ManifestLog.footerStats(spark, files, "l_orderkey", None, Seq.empty)
+    val foot = ManifestLog.footerStats(spark, files, "l_orderkey", Seq.empty)
     assert(foot.isDefined, "footer path must handle a plain long key")
     assert(rowsOf(foot.get) == rowsOf(ManifestLog.statsOfScan(spark, files, "l_orderkey")))
     assert(foot.get.schema == ManifestLog.statsOfScan(spark, files, "l_orderkey").schema)
@@ -50,7 +50,7 @@ class FooterStatsSpec extends AnyFunSuite {
     li.repartitionByRange(3, col("l_returnflag")).sortWithinPartitions("l_returnflag")
       .write.parquet(dir)
     val files = writtenFiles(dir)
-    val foot = ManifestLog.footerStats(spark, files, "l_returnflag", None, Seq.empty)
+    val foot = ManifestLog.footerStats(spark, files, "l_returnflag", Seq.empty)
     assert(foot.isDefined, "footer path must handle a string key")
     assert(rowsOf(foot.get) == rowsOf(ManifestLog.statsOfScan(spark, files, "l_returnflag")))
   }
@@ -71,7 +71,7 @@ class FooterStatsSpec extends AnyFunSuite {
     Seq("a", fffd, emoji, "z" + fffd, "z" + emoji)
       .toDF("k").coalesce(1).write.parquet(dir)
     val files = writtenFiles(dir)
-    val foot = ManifestLog.footerStats(spark, files, "k", None, Seq.empty)
+    val foot = ManifestLog.footerStats(spark, files, "k", Seq.empty)
     assert(foot.isDefined, "footer path must handle a non-BMP string key")
     assert(rowsOf(foot.get) == rowsOf(ManifestLog.statsOfScan(spark, files, "k")))
   }
@@ -82,11 +82,11 @@ class FooterStatsSpec extends AnyFunSuite {
       .write.parquet(dir)
     val files = writtenFiles(dir)
     val foot = ManifestLog.footerStats(spark, files, "l_orderkey",
-      Some("l_partkey"), Seq("l_suppkey"))
+      Seq("l_partkey", "l_suppkey"))
     assert(foot.isDefined)
     assert(rowsOf(foot.get) ==
-      rowsOf(ManifestLog.statsOfNScan(spark, files, "l_orderkey", "l_partkey",
-        Seq("l_suppkey"))))
+      rowsOf(ManifestLog.statsOfScan(spark, files, "l_orderkey",
+        Seq("l_partkey", "l_suppkey"))))
   }
 
   test("footer path refuses floating keys (falls back to the scan)") {
@@ -94,7 +94,7 @@ class FooterStatsSpec extends AnyFunSuite {
     li.withColumn("dq", col("l_quantity").cast("double"))
       .write.parquet(dir)
     val files = writtenFiles(dir)
-    assert(ManifestLog.footerStats(spark, files, "dq", None, Seq.empty).isEmpty)
+    assert(ManifestLog.footerStats(spark, files, "dq", Seq.empty).isEmpty)
   }
 
   test("whole-commit parity: write() snapshot equals the scan-path snapshot") {

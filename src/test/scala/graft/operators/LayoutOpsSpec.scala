@@ -78,7 +78,7 @@ class LayoutOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val rows = Seq((3L, 5L), (0L, 0L), (65535L, 0L), (0L, 65535L), (65535L, 65535L))
       .toDF("a", "b")
-      .select(LayoutOps.morton(col("a"), col("b")).as("z"))
+      .select(LayoutOps.mortonN(Seq(col("a"), col("b"))).as("z"))
       .collect().map(_.getLong(0)).toSeq
     // spread(3)=0b101=5, spread(5)=0b10001=17 → 5 | 17<<1 = 39
     assert(rows == Seq(39L, 0L, 0x55555555L, 0xAAAAAAAAL, 0xFFFFFFFFL))
@@ -100,7 +100,7 @@ class LayoutOpsSpec extends AnyFunSuite {
       .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
     val zDir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
     val rndDir = java.nio.file.Files.createTempDirectory("graft-zrand").toString
-    LayoutOps.writeZOrdered(li, "l_partkey", "l_suppkey", zDir)
+    LayoutOps.writeZOrderedN(li, Seq("l_partkey", "l_suppkey"), zDir)
     // control: same data, same file/row-group geometry, random order
     li.withColumn("__r", xxhash64(col("l_orderkey"), col("l_partkey")))
       .repartitionByRange(32, col("__r")).sortWithinPartitions("__r").drop("__r")
@@ -296,108 +296,6 @@ class LayoutOpsSpec extends AnyFunSuite {
       s"3-col z-ordered scan read $zRows rows vs $rndRows random-order — no pruning win")
   }
 
-  test("manifest append merges new files' stats; pruned scan equals plain scan after appends") {
-    val li = graft.sources.Tables.lineitem(spark, "/root/testdata/sf0.01")
-      .select("l_orderkey", "l_partkey", "l_quantity")
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-app").toString
-    // day-0 load + three daily appends, split by order-key stripes
-    val keys = li.agg(min("l_orderkey"), max("l_orderkey")).head()
-    val (kLo, kHi) = (keys.getLong(0), keys.getLong(1))
-    val stripe = (kHi - kLo) / 4 + 1
-    def slice(i: Int) = li.filter(
-      col("l_orderkey").between(kLo + i * stripe, kLo + (i + 1) * stripe - 1))
-    LayoutOps.writeWithManifest(slice(0), "l_orderkey", dir, files = 4)
-    (1 to 3).foreach(i => LayoutOps.appendWithManifest(slice(i), "l_orderkey", dir, files = 4))
-
-    // the manifest tracks every data file with correct totals
-    val manifest = spark.read.parquet(s"$dir/_manifest").collect()
-    assert(manifest.length == 16, s"4 writes × 4 files, had ${manifest.length}")
-    assert(manifest.map(_.getAs[Long]("rows")).sum == li.count())
-
-    // re-prune parity after the appends: narrow scan == plain scan
-    val (lo, hi) = (kLo + stripe, kLo + stripe + stripe / 5) // inside append #1
-    val (pruned, survivors, total) = LayoutOps.readPruned(spark, dir, "l_orderkey", lo, hi)
-    val expect = spark.read.parquet(dir)
-      .filter(col("l_orderkey").between(lo, hi))
-      .collect().map(_.toString).sorted.toSeq
-    val got = pruned.collect().map(_.toString).sorted.toSeq
-    assert(got == expect && got.nonEmpty)
-    assert(total == 16 && survivors * 3 <= total,
-      s"manifest kept $survivors/$total files for a narrow range after appends")
-  }
-
-  test("compaction repacks small files into range-clustered targets; data, manifest, and pruning parity hold") {
-    val li = graft.sources.Tables.lineitem(spark, "/root/testdata/sf0.01")
-      .select("l_orderkey", "l_partkey", "l_quantity")
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    val keys = li.agg(min("l_orderkey"), max("l_orderkey")).head()
-    val (kLo, kHi) = (keys.getLong(0), keys.getLong(1))
-    val stripe = (kHi - kLo) / 4 + 1
-    def slice(i: Int) = li.filter(
-      col("l_orderkey").between(kLo + i * stripe, kLo + (i + 1) * stripe - 1))
-    LayoutOps.writeWithManifest(slice(0), "l_orderkey", dir, files = 4)
-    (1 to 3).foreach(i => LayoutOps.appendWithManifest(slice(i), "l_orderkey", dir, files = 4))
-    val before = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    val nRows = before.size.toLong
-
-    // every file is small vs a half-table target → all 16 repack
-    val target = nRows / 2 + 1
-    val (plannedSmall, plannedKeep, plannedOut) =
-      LayoutOps.compactionPlan(spark, dir, target)
-    assert(plannedSmall.size == 16 && plannedKeep.isEmpty && plannedOut == 2)
-    val (gone, born) = LayoutOps.compact(spark, dir, "l_orderkey", target)
-    assert(gone == 16 && born == 2)
-
-    // data parity: nothing lost, nothing duplicated
-    val after = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    assert(after == before)
-
-    // manifest parity: exactly the new files, totals preserved
-    val manifest = spark.read.parquet(s"$dir/_manifest").collect()
-    assert(manifest.length == 2 && manifest.map(_.getAs[Long]("rows")).sum == nRows)
-
-    // range clustering survived: a narrow scan still prunes to 1 file
-    val (pruned, survivors, total) =
-      LayoutOps.readPruned(spark, dir, "l_orderkey", kLo, kLo + stripe / 5)
-    val expect = spark.read.parquet(dir)
-      .filter(col("l_orderkey").between(kLo, kLo + stripe / 5))
-      .collect().map(_.toString).sorted.toSeq
-    assert(pruned.collect().map(_.toString).sorted.toSeq == expect)
-    assert(total == 2 && survivors == 1, s"$survivors/$total files for a narrow range")
-
-    // settled files are never rewritten: re-compact with a tiny target
-    assert(LayoutOps.compact(spark, dir, "l_orderkey", targetRows = 2) == ((0, 0)))
-  }
-
-  test("manifest zone maps skip most FILES on a narrow range; results equal the plain scan") {
-    val li = graft.sources.Tables.lineitem(spark, "/root/testdata/sf0.01")
-      .select("l_orderkey", "l_partkey", "l_quantity")
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest").toString
-    LayoutOps.writeWithManifest(li, "l_orderkey", dir, files = 16)
-
-    val keys = li.agg(min("l_orderkey"), max("l_orderkey")).head()
-    val (lo, hi) = (keys.getLong(0), keys.getLong(0) +
-      (keys.getLong(1) - keys.getLong(0)) / 20) // ~5% of the key range
-    val (pruned, survivors, total) = LayoutOps.readPruned(spark, dir, "l_orderkey", lo, hi)
-
-    // parity: zone maps are a superset prefilter + residual filter
-    val expect = spark.read.parquet(dir)
-      .filter(col("l_orderkey").between(lo, hi))
-      .collect().map(_.toString).sorted.toSeq
-    val got = pruned.collect().map(_.toString).sorted.toSeq
-    assert(got == expect && got.nonEmpty)
-
-    // the range layout + manifest must plan a fraction of the files
-    assert(total == 16, s"manifest should carry all 16 files, had $total")
-    assert(survivors * 3 <= total,
-      s"manifest kept $survivors/$total files for a 5% key range — no file skipping")
-
-    // an empty predicate range prunes to zero files and zero rows
-    val (none, s0, _) = LayoutOps.readPruned(spark, dir, "l_orderkey",
-      keys.getLong(1) + 1000, keys.getLong(1) + 2000)
-    assert(s0 == 0 && none.count() == 0)
-  }
-
   test("bloom manifest skips most files on a point lookup where zone maps prune nothing") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.01")
       .select("doc_id", "source", "n_chars")
@@ -434,42 +332,6 @@ class LayoutOpsSpec extends AnyFunSuite {
     val (noneDf, s0, _) = LayoutOps.readPrunedByBloom(
       spark, dir, "doc_id", domain + 999983L)
     assert(s0 <= 1 && noneDf.count() == 0)
-  }
-
-  test("streaming foreachBatch appends maintain the zone-map manifest; pruned reads stay exact") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val li = graft.sources.Tables.lineitem(spark, "/root/testdata/sf0.001")
-      .select("l_orderkey", "l_quantity").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toIndexedSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-stream").toString
-    // batch 0 seeds the table; each further micro-batch appends through
-    // the SAME driver-side manifest maintenance the daily-crawl shape
-    // uses — foreachBatch is exactly that cadence
-    val mem = MemoryStream[(Long, Double)]
-    val q = mem.toDF().toDF("l_orderkey", "l_quantity")
-      .writeStream.outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-        if (bid == 0L) LayoutOps.writeWithManifest(df, "l_orderkey", dir, files = 4)
-        else LayoutOps.appendWithManifest(df, "l_orderkey", dir, files = 4)
-      }
-      .start()
-    try {
-      li.grouped(li.length / 3 + 1).foreach { chunk =>
-        mem.addData(chunk)
-        q.processAllAvailable()
-        // after EVERY batch the manifest must prune correctly
-        val (lo, hi) = (li.head._1, li.head._1 + (li.last._1 - li.head._1) / 10)
-        val (pruned, _, total) = LayoutOps.readPruned(spark, dir, "l_orderkey", lo, hi)
-        val expect = spark.read.parquet(dir)
-          .filter(col("l_orderkey").between(lo, hi)).count()
-        assert(pruned.count() == expect, s"parity broke at batch (files=$total)")
-      }
-    } finally q.stop()
-    val manifest = spark.read.parquet(s"$dir/_manifest").collect()
-    assert(manifest.length == 12, s"3 batches x 4 files, had ${manifest.length}")
-    assert(manifest.map(_.getAs[Long]("rows")).sum == li.length)
   }
 
   test("bloom manifest append adds filters for only the new files; probe parity holds") {

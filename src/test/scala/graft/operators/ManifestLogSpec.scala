@@ -34,6 +34,9 @@ class ManifestLogSpec extends AnyFunSuite {
     ManifestLog.append(slice(1), "l_orderkey", dir, files = 4)
     ManifestLog.append(slice(2), "l_orderkey", dir, files = 4)
     assert(ManifestLog.versions(spark, dir) == Seq(1, 2, 3))
+    // the snapshot's per-file row counts add up to the table
+    assert(ManifestLog.snapshot(spark, dir).agg(sum("rows")).head().getLong(0) ==
+      sliceRows(3).size)
 
     // time travel: version v sees exactly the first v slices
     for (v <- 1 to 3) {
@@ -51,6 +54,16 @@ class ManifestLogSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(pruned.collect().map(_.toString).sorted.toSeq == expectNarrow)
     assert(total2 == 8 && survivors * 3 <= total2, s"$survivors/$total2 survived")
+    // a range past every file's keys prunes to zero files and zero rows
+    val (none, s0, _) = ManifestLog.readPrunedAt(spark, dir, "l_orderkey",
+      kHi + 1000, kHi + 2000)
+    assert(s0 == 0 && none.count() == 0)
+    // a column with no zone map keeps every file: its predicate is
+    // never checked against the key's bounds
+    val (pk, pkSurv, pkTotal) = ManifestLog.readPrunedAt(spark, dir, "l_partkey", 1L, 50L)
+    assert(pk.collect().map(_.toString).sorted.toSeq ==
+      (0 until 3).map(slice).reduce(_ union _).filter(col("l_partkey").between(1L, 50L))
+        .collect().map(_.toString).sorted.toSeq && pkSurv == pkTotal)
 
     // compaction: v4 swaps the 12 small files for 2, data identical to
     // v3; v3 still resolves because the originals stay on disk
@@ -61,6 +74,12 @@ class ManifestLogSpec extends AnyFunSuite {
     assert(v4.collect().map(_.toString).sorted.toSeq == sliceRows(3) && t4 == 2)
     val (v3, _, t3) = ManifestLog.readPrunedAt(spark, dir, "l_orderkey", kLo, kHi, 3)
     assert(v3.collect().map(_.toString).sorted.toSeq == sliceRows(3) && t3 == 12)
+    // the repack kept range clustering: a narrow range reads 1 of 2 files
+    val (narrow4, s4, _) = ManifestLog.readPrunedAt(spark, dir, "l_orderkey",
+      kLo, kLo + stripe / 5)
+    assert(narrow4.collect().map(_.toString).sorted.toSeq == expectNarrow && s4 == 1)
+    // settled files are never rewritten: a tiny target compacts nothing
+    assert(ManifestLog.compact(spark, dir, "l_orderkey", targetRows = 2) == ((0, 0)))
 
     // a crashed append = data files with no snapshot: invisible to the
     // latest reader, reclaimed by vacuum
@@ -346,11 +365,16 @@ class ManifestLogSpec extends AnyFunSuite {
     try chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
     finally q.stop()
     assert(ManifestLog.versions(spark, dir) == (1 to chunks.length))
-    // every micro-batch's snapshot still resolves to exactly its prefix
+    // every micro-batch's snapshot still resolves to exactly its prefix,
+    // and a narrow pruned read of it stays exact
+    val narrowHi = rows.head._1 + (rows.last._1 - rows.head._1) / 10
     for (v <- 1 to chunks.length) {
       val (df, _, _) = ManifestLog.readPrunedAt(spark, dir, "l_orderkey",
         rows.head._1, rows.last._1, version = v)
       assert(df.count() == chunks.take(v).map(_.size).sum, s"v$v prefix")
+      val (narrow, _, _) = ManifestLog.readPrunedAt(spark, dir, "l_orderkey",
+        rows.head._1, narrowHi, version = v)
+      assert(narrow.count() == chunks.take(v).flatten.count(_._1 <= narrowHi), s"v$v narrow")
     }
   }
 
@@ -957,10 +981,66 @@ class ManifestLogSpec extends AnyFunSuite {
       .count() == 310 - deleted)
   }
 
+  /** The snapshot columns every writer commits. */
+  private val SnapCols = Seq("file", "lo", "hi", "rows", "dv", "xs")
+
+  /** Columns of the payload the head pointer names — what the last
+    * writer committed, before any read-side normalization.
+    */
+  private def headPayloadCols(dir: String): Seq[String] = {
+    val v = ManifestLog.currentVersion(spark, dir)
+    val ptr = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(f"$dir/_mlog/v$v%05d")), "UTF-8")
+    spark.read.parquet(s"$dir/_mlog/${ptr.linesIterator.next().trim}").columns.toSeq
+  }
+
+  /** A snapshot row's zone map on clustered axis `c`, if it has one. */
+  private def xsOf(r: org.apache.spark.sql.Row, c: String): Option[(Long, Long)] =
+    Option(r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("xs"))
+      .flatMap(_.find(_.getString(0) == c)).map(e => (e.getLong(1), e.getLong(2)))
+
+  /** Rewrite a clustered table into the on-disk layout of builds that
+    * kept the second axis apart: every payload gets LONG `lo2`/`hi2`
+    * columns holding the first `xs` entry (the rest stay in `xs`, NULL
+    * when none), and the meta names the axis on a `statsCol2=` line
+    * with `statsColsX=` listing only the axes after it.
+    */
+  private def toLegacyLayout(dir: String): Unit = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def put(file: String, body: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(file), true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    ManifestLog.versions(spark, dir).foreach { v =>
+      val snap = ManifestLog.snapshot(spark, dir, v)
+      val rows = snap.collect().toSeq.map { r =>
+        val xs = Option(r.getAs[scala.collection.Seq[Row]]("xs")).getOrElse(Seq.empty)
+        val (lo2, hi2) = xs.headOption
+          .map(e => (Long.box(e.getLong(1)), Long.box(e.getLong(2)))).getOrElse((null, null))
+        Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4), lo2, hi2,
+          if (xs.size > 1) xs.tail.toSeq else null)
+      }
+      val schema = StructType(snap.schema.fields.take(5) ++ Seq(
+        StructField("lo2", LongType), StructField("hi2", LongType), snap.schema("xs")))
+      spark.createDataFrame(rows.asJava, schema).coalesce(1)
+        .write.parquet(s"$dir/_mlog/s-legacy-v$v")
+      put(f"$dir/_mlog/v$v%05d", s"s-legacy-v$v")
+    }
+    val axes = ManifestLog.statsColumnsX(spark, dir)
+    put(s"$dir/_mlog/_meta",
+      (Seq(s"statsCol=${ManifestLog.statsColumn(spark, dir).get}", s"statsCol2=${axes.head}") ++
+        (if (axes.size > 1) Seq(s"statsColsX=${axes.tail.mkString(",")}") else Seq.empty))
+        .mkString("", "\n", "\n"))
+  }
+
   test("clustered writes: two-column zone maps prune on either predicate; rewrites keep col2 stats (computed from the rows in hand)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-mlog-clu").toString
     val data = li // (l_orderkey, l_partkey, l_quantity)
-    ManifestLog.writeClustered(data, "l_orderkey", "l_partkey", dir, files = 16)
+    ManifestLog.writeClusteredN(data, Seq("l_orderkey", "l_partkey"), dir, files = 16)
+    assert(headPayloadCols(dir) == SnapCols, "writeClusteredN payload shape")
     val r = data.agg(min("l_orderkey"), max("l_orderkey"),
       min("l_partkey"), max("l_partkey")).head()
     val (kLo, kHi, pLo, pHi) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
@@ -969,25 +1049,25 @@ class ManifestLogSpec extends AnyFunSuite {
       data.filter(col("l_orderkey").between(k1, k2) &&
         col("l_partkey").between(p1, p2))
         .collect().map(_.toString).sorted.toSeq
+    def box(d: String, k1: Long, k2: Long, p1: Long, p2: Long) =
+      ManifestLog.readPrunedN(spark, d, Seq(("l_orderkey", k1, k2), ("l_partkey", p1, p2)))
     // a box narrow in BOTH dims: exact parity + real skipping
-    val (bdf, bSurv, bTotal) = ManifestLog.readPruned2(spark, dir,
-      "l_orderkey", kLo, kA, "l_partkey", pLo, pA)
+    val (bdf, bSurv, bTotal) = box(dir, kLo, kA, pLo, pA)
     assert(bdf.collect().map(_.toString).sorted.toSeq == exact(kLo, kA, pLo, pA))
     assert(bTotal == 16 && bSurv * 2 <= bTotal, s"box scan kept $bSurv/$bTotal files")
     // a SECOND-column-only predicate prunes too (the dimension a
     // single-key layout cannot skip on)
-    val (cdf, cSurv, _) = ManifestLog.readPruned2(spark, dir,
-      "l_orderkey", kLo, kHi, "l_partkey", pLo, pA)
+    val (cdf, cSurv, _) = box(dir, kLo, kHi, pLo, pA)
     assert(cdf.collect().map(_.toString).sorted.toSeq == exact(kLo, kHi, pLo, pA))
     assert(cSurv < bTotal, s"col2-only scan kept $cSurv/$bTotal files")
     // clustered append: both-column stats on the fresh files, parity holds
     val extra = data.filter(col("l_orderkey").between(kLo, kLo + (kA - kLo) / 2))
     ManifestLog.appendClustered(extra, dir, files = 2)
+    assert(headPayloadCols(dir) == SnapCols, "appendClustered payload shape")
     val snap = ManifestLog.snapshot(spark, dir).collect()
-    assert(snap.length == 18 && snap.forall(!_.isNullAt(5)),
+    assert(snap.length == 18 && snap.forall(xsOf(_, "l_partkey").isDefined),
       "appendClustered lost col2 stats")
-    val (adf, _, aTotal) = ManifestLog.readPruned2(spark, dir,
-      "l_orderkey", kLo, kA, "l_partkey", pLo, pHi)
+    val (adf, _, aTotal) = box(dir, kLo, kA, pLo, pHi)
     val expectUnion = data.filter(col("l_orderkey").between(kLo, kA))
       .unionAll(extra.filter(col("l_orderkey").between(kLo, kA)))
       .collect().map(_.toString).sorted.toSeq
@@ -999,29 +1079,84 @@ class ManifestLogSpec extends AnyFunSuite {
     val band = data.select("l_orderkey").distinct()
       .filter(col("l_orderkey").between(kLo, kLo + (kHi - kLo) / 10))
     ManifestLog.delete(band, "l_orderkey", dir)
+    assert(headPayloadCols(dir) == SnapCols, "delete payload shape")
     val snapDel = ManifestLog.snapshot(spark, dir).collect()
-    assert(snapDel.forall(!_.isNullAt(5)),
+    assert(snapDel.forall(xsOf(_, "l_partkey").isDefined),
       "a rewrite degraded col2 stats it could have computed")
     val postDel = data.unionAll(extra)
       .join(band, Seq("l_orderkey"), "left_anti")
       .filter(col("l_orderkey").between(kLo, kA) && col("l_partkey").between(pLo, pA))
       .collect().map(_.toString).sorted.toSeq
-    val (ddf, dSurv, dTotal) = ManifestLog.readPruned2(spark, dir,
-      "l_orderkey", kLo, kA, "l_partkey", pLo, pA)
+    val (ddf, dSurv, dTotal) = box(dir, kLo, kA, pLo, pA)
     assert(ddf.collect().map(_.toString).sorted.toSeq == postDel)
     assert(dSurv <= dTotal)
+    // every other writer commits the same six-column snapshot shape
+    ManifestLog.merge(data.limit(50).withColumn("l_quantity", lit(1.0)), "l_orderkey", dir)
+    assert(headPayloadCols(dir) == SnapCols, "merge payload shape")
+    ManifestLog.deleteMor(data.select("l_orderkey").limit(5), "l_orderkey", dir)
+    assert(headPayloadCols(dir) == SnapCols, "deleteMor payload shape")
+    ManifestLog.compact(spark, dir, "l_orderkey", targetRows = data.count() / 4 + 1)
+    assert(headPayloadCols(dir) == SnapCols, "compact payload shape")
+    ManifestLog.replace(data.limit(100), "l_orderkey", dir, files = 2)
+    assert(headPayloadCols(dir) == SnapCols, "replace payload shape")
+    val plain = java.nio.file.Files.createTempDirectory("graft-mlog-shape").toString
+    ManifestLog.write(data.limit(100), "l_orderkey", plain, files = 2)
+    assert(headPayloadCols(plain) == SnapCols, "write payload shape")
+    ManifestLog.append(data.limit(50), "l_orderkey", plain, files = 1)
+    assert(headPayloadCols(plain) == SnapCols, "append payload shape")
+
+    // a table in the layout of builds that kept the second axis in
+    // lo2/hi2 columns and a statsCol2= meta line reads the same: same
+    // snapshots, same survivors and rows through readPrunedN and the
+    // SQL face, and it takes an appendClustered and a compact on top
+    val old = java.nio.file.Files.createTempDirectory("graft-mlog-legacy").toString
+    ManifestLog.writeClusteredN(data, Seq("l_orderkey", "l_partkey"), old, files = 8)
+    val fmt = classOf[graft.sources.ManifestBatchSource].getName
+    def faceRun(): (Int, Seq[String]) = {
+      val rows = spark.read.format(fmt).option("path", old).load()
+        .filter(col("l_partkey") <= pA).collect().map(_.toString).sorted.toSeq
+      (graft.sources.ManifestBatchSource.lastPlannedFiles.get(), rows)
+    }
+    def prunedRun() = {
+      val (df, surv, total) = box(old, kLo, kA, pLo, pA)
+      (df.collect().map(_.toString).sorted.toSeq, surv, total)
+    }
+    val snapBefore = ManifestLog.snapshot(spark, old).collect().map(_.toString).sorted.toSeq
+    val (prunedBefore, faceBefore) = (prunedRun(), faceRun())
+    toLegacyLayout(old)
+    assert(spark.read.parquet(s"$old/_mlog/s-legacy-v1").columns.toSeq ==
+      Seq("file", "lo", "hi", "rows", "dv", "lo2", "hi2", "xs"), "fixture layout")
+    assert(ManifestLog.statsColumnsX(spark, old) == Seq("l_partkey"))
+    assert(ManifestLog.snapshot(spark, old).collect().map(_.toString).sorted.toSeq == snapBefore)
+    assert(prunedRun() == prunedBefore && prunedBefore._2 < prunedBefore._3)
+    assert(faceRun() == faceBefore && faceBefore._1 < 8)
+    val oldExtra = data.filter(col("l_orderkey").between(kLo, kA))
+    ManifestLog.appendClustered(oldExtra, old, files = 2)                   // v2
+    assert(headPayloadCols(old) == SnapCols)
+    assert(ManifestLog.snapshot(spark, old).collect().forall(xsOf(_, "l_partkey").isDefined))
+    val withExtra = data.unionAll(oldExtra)
+      .filter(col("l_orderkey").between(kLo, kA) && col("l_partkey").between(pLo, pA))
+      .collect().map(_.toString).sorted.toSeq
+    assert(prunedRun()._1 == withExtra)
+    ManifestLog.compact(spark, old, "l_orderkey", targetRows = data.count() / 4 + 1) // v3
+    assert(prunedRun()._1 == withExtra)
+    // time travel to the legacy version still resolves exactly
+    assert(ManifestLog.snapshot(spark, old, 1).collect().map(_.toString).sorted.toSeq ==
+      snapBefore)
+    assert(ManifestLog.read(spark, old, 1).collect().map(_.toString).sorted.toSeq ==
+      data.collect().map(_.toString).sorted.toSeq)
   }
 
   test("compact on a clustered table re-clusters: col2 stats survive maintenance and second-dimension file-skipping still prunes") {
     val dir = java.nio.file.Files.createTempDirectory("graft-mlog-cluc").toString
     val data = li
-    ManifestLog.writeClustered(data, "l_orderkey", "l_partkey", dir, files = 16)
+    ManifestLog.writeClusteredN(data, Seq("l_orderkey", "l_partkey"), dir, files = 16)
     val r = data.agg(min("l_orderkey"), max("l_orderkey"),
       min("l_partkey"), max("l_partkey")).head()
     val (kLo, kHi, pLo, pHi) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     val (kA, pA) = (kLo + (kHi - kLo) / 4, pLo + (pHi - pLo) / 4)
-    def quarterBox() = ManifestLog.readPruned2(spark, dir,
-      "l_orderkey", kLo, kA, "l_partkey", pLo, pA)
+    def quarterBox() = ManifestLog.readPrunedN(spark, dir,
+      Seq(("l_orderkey", kLo, kA), ("l_partkey", pLo, pA)))
     val (beforeDf, beforeSurv, beforeTotal) = quarterBox()
     val expect = beforeDf.collect().map(_.toString).sorted.toSeq
     assert(beforeSurv * 2 <= beforeTotal, s"pre-compact box kept $beforeSurv/$beforeTotal")
@@ -1031,7 +1166,7 @@ class ManifestLogSpec extends AnyFunSuite {
       targetRows = data.count() / 4 + 1)
     assert(gone == 16 && born >= 2)
     val snap = ManifestLog.snapshot(spark, dir).collect()
-    assert(snap.forall(!_.isNullAt(5)), "compact degraded col2 stats")
+    assert(snap.forall(xsOf(_, "l_partkey").isDefined), "compact degraded col2 stats")
     // same box: exact parity, and the compacted layout STILL skips
     // files on the two-dimensional predicate (Hilbert re-clustering)
     val (afterDf, afterSurv, afterTotal) = quarterBox()
@@ -1040,12 +1175,33 @@ class ManifestLogSpec extends AnyFunSuite {
     assert(afterSurv < afterTotal,
       s"post-compact box kept every file ($afterSurv/$afterTotal) — second-dimension pruning lost")
     // a col2-only predicate also still prunes after maintenance
-    val (c2df, c2Surv, _) = ManifestLog.readPruned2(spark, dir,
-      "l_orderkey", kLo, kHi, "l_partkey", pLo, pA)
+    val (c2df, c2Surv, _) = ManifestLog.readPrunedN(spark, dir,
+      Seq(("l_orderkey", kLo, kHi), ("l_partkey", pLo, pA)))
     val exact2 = data.filter(col("l_partkey").between(pLo, pA))
       .collect().map(_.toString).sorted.toSeq
     assert(c2df.collect().map(_.toString).sorted.toSeq == exact2)
     assert(c2Surv < afterTotal, s"col2-only scan kept $c2Surv/$afterTotal files")
+
+    // a 3-axis table: compaction re-clusters on EVERY axis, so a box on
+    // the third axis still skips files afterwards (re-clustering on the
+    // first two alone leaves each file spanning the whole third axis)
+    val dir3 = java.nio.file.Files.createTempDirectory("graft-mlog-cluc3").toString
+    val data3 = spark.read.parquet(li.inputFiles.toIndexedSeq: _*) // li's files, one more axis
+      .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
+    ManifestLog.writeClusteredN(data3, Seq("l_orderkey", "l_partkey", "l_suppkey"),
+      dir3, files = 16)
+    val sr = data3.agg(min("l_suppkey"), max("l_suppkey")).head()
+    val (sLo, sA) = (sr.getLong(0), sr.getLong(0) + (sr.getLong(1) - sr.getLong(0)) / 4)
+    def suppBox() = ManifestLog.readPrunedN(spark, dir3, Seq(("l_suppkey", sLo, sA)))
+    val exact3 = data3.filter(col("l_suppkey").between(sLo, sA))
+      .collect().map(_.toString).sorted.toSeq
+    val (gone3, born3) = ManifestLog.compact(spark, dir3, "l_orderkey",
+      targetRows = data3.count() / 8 + 1)
+    assert(gone3 == 16 && born3 >= 2)
+    val (s3df, s3Surv, s3Total) = suppBox()
+    assert(s3df.collect().map(_.toString).sorted.toSeq == exact3)
+    assert(s3Total == born3 && s3Surv < s3Total,
+      s"post-compact third-axis box kept every file ($s3Surv/$s3Total) — third-axis pruning lost")
   }
 
   test("history: one labeled row per version (write/append/rewrite/mor-delete/restore)") {

@@ -126,7 +126,7 @@ class ManifestBatchSourceSpec extends AnyFunSuite {
 
     // clustered tables skip on the SECOND zone-map dimension as well
     val cdir = Files.createTempDirectory("mbs-prune2").toString
-    ManifestLog.writeClustered(li, "l_orderkey", "l_partkey", cdir, files = 8)
+    ManifestLog.writeClusteredN(li, Seq("l_orderkey", "l_partkey"), cdir, files = 8)
     val pkeys = li.select("l_partkey").distinct()
       .orderBy("l_partkey").limit(5).collect().map(_.getLong(0))
     val c2 = ManifestBatchSource.read(spark, cdir)
@@ -134,6 +134,16 @@ class ManifestBatchSourceSpec extends AnyFunSuite {
     assert(c2.count() == li.filter(col("l_partkey") <= pkeys.last).count())
     assert(ManifestBatchSource.lastPlannedFiles.get() < 8,
       "second-dimension predicate should skip clustered files")
+
+    // string keys skip in the engine's UTF-8 order: U+1F600 sorts
+    // BELOW U+FFFD in UTF-16 code units but ABOVE it in UTF-8, so a
+    // UTF-16 comparison against the file's hi (the emoji) would skip
+    // the file and lose both matching rows
+    import spark.implicits._
+    val sdir = Files.createTempDirectory("mbs-prune-utf8").toString
+    val (fffd, emoji) = ("\uFFFD", "\uD83D\uDE00")
+    ManifestLog.write(Seq("a", fffd, emoji).toDF("k"), "k", sdir, files = 1)
+    assert(ManifestBatchSource.read(spark, sdir).filter(col("k") >= fffd).count() == 2)
   }
 
   test("DV probe is O(own tombstones): after a broad MOR delete across 100 files, a 2-file probe footer-skips nearly every DV sidecar part") {
@@ -283,8 +293,9 @@ class ManifestBatchSourceSpec extends AnyFunSuite {
     // stays alive after maintenance, and the values still match
     ManifestLog.appendClustered(li3.filter(col("l_orderkey") % 2 === 1), dir, files = 4)
     ManifestLog.snapshot(spark, dir).collect().foreach { r =>
-      assert(!r.isNullAt(7) && r.getSeq[org.apache.spark.sql.Row](7).size == 1,
-        "every file (initial + appended) must carry its 3rd-axis triple")
+      val xs = r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("xs")
+      assert(xs != null && xs.map(_.getString(0)) == Seq("l_partkey", "l_suppkey"),
+        "every file (initial + appended) must carry a triple per axis past the key")
     }
     qs.foreach { case (a, Array(q25)) =>
       check(s"post-append axis $a", col(a) <= lit(q25.toLong))

@@ -206,14 +206,14 @@ class ManifestFollowStreamSpec extends AnyFunSuite {
     // anchors train ONCE on the corpus (the incremental-index
     // discipline); admission is one deterministic SignPackN pass
     val anchors = Similarity.binaryAnchors(corpus, 64)
-    Similarity.binaryAssignN(corpus, anchors)
+    Similarity.binaryAssign(corpus, anchors)
       .write.mode("append").parquet(codeDir)
 
     def start() = ManifestFollowSource.stream(spark, tbl, fromVersion = 2)
       .writeStream.outputMode("append")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         if (!df.isEmpty)
-          Similarity.binaryAssignN(
+          Similarity.binaryAssign(
               df.select(col("vec_id"), col("embedding")), anchors)
             .write.mode("append").parquet(codeDir)
       }
@@ -228,11 +228,11 @@ class ManifestFollowStreamSpec extends AnyFunSuite {
     // the streamed-in code table probes BYTE-IDENTICALLY to a one-shot
     // assignment of the whole corpus under the same anchors
     val queries = emb.filter(col("vec_id") < 10)
-    val streamed = Similarity.binaryProbeN(
+    val streamed = Similarity.binaryProbe(
         spark.read.parquet(codeDir), emb, queries, anchors, 5)
       .collect().toSeq
-    val oneShot = Similarity.binaryProbeN(
-        Similarity.binaryAssignN(emb, anchors), emb, queries, anchors, 5)
+    val oneShot = Similarity.binaryProbe(
+        Similarity.binaryAssign(emb, anchors), emb, queries, anchors, 5)
       .collect().toSeq
     assert(streamed == oneShot && streamed.nonEmpty,
       "table-tailed index admission diverged from one-shot assignment")
