@@ -574,20 +574,6 @@ object Verify {
     if (only.isEmpty) try {
       val inv = invariantJson
       Files.writeString(Paths.get(s"$outDir/invariants.json"), inv)
-      // ALSO leave the record in the repo as a committed round
-      // artifact (INVARIANTS_r{N}.json, diffable round over round like
-      // BENCH_r*.json.flat): N = latest driver CORRECTNESS round + 1,
-      // since the driver runs Verify before writing CORRECTNESS_r{N}.
-      // Heuristic repo root = cwd when it holds build.sbt (how both
-      // the driver and local `sbt runMain` invoke this).
-      val cwd = Paths.get("").toAbsolutePath
-      if (Files.exists(cwd.resolve("build.sbt"))) {
-        val rx = """CORRECTNESS_r(\d+)\.json""".r
-        val round = Files.list(cwd).toArray.map(_.toString).flatMap {
-          p => rx.findFirstMatchIn(p).map(_.group(1).toInt)
-        }.foldLeft(0)(math.max) + 1
-        Files.writeString(cwd.resolve(f"INVARIANTS_r$round%02d.json"), inv)
-      }
       if (inv.contains("false")) System.err.println(s"[verify] INVARIANT FAILED: $inv")
     } catch { case e: Throwable =>
       System.err.println(s"[verify] invariant computation failed: ${e.getMessage}")

@@ -74,7 +74,7 @@ object SemDedup {
     // wall at 100x data). The shuffle writes (id, u, bucket) once per
     // row, co-partitions the centroid aggregate AND both sides of the
     // bucket self-join on the same key (no further exchange for
-    // either), and is exactly the bucketed layout (LayoutOps shape)
+    // either), and is exactly the bucketed layout (writeBucketed shape)
     // you'd write once and join repeatedly at 100 TB.
     val keyed = emb
       .select(col(idCol).as("id"),

@@ -260,13 +260,6 @@ object Similarity {
     Seq.fill(bits)(Seq.fill(dim)(next()))
   }
 
-  /** Sign-bit bucket id from the hyperplane projections. */
-  def lshBucket(vec: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      val plane = array(p.map(lit): _*)
-      when(dot(vec, plane) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** Bits for ~`targetBucket` expected vectors per bucket at table
     * size `n`: bits ≈ log₂(n / targetBucket), the auto-tuning that
     * keeps candidate volume flat as the table grows (at billions of
@@ -415,9 +408,6 @@ object Similarity {
   private val trainedCache =
     scala.collection.concurrent.TrieMap.empty[(Int, Int, String), AnyRef]
   private val TrainedCacheMax = 256
-
-  /** Drop all memoized trained artifacts (tests / corpus rewrite). */
-  def clearTrainedCache(): Unit = trainedCache.clear()
 
   /** Snapshot of the plan's leaf input files — folds DATA identity into
     * the memo key: Spark overwrite writes fresh part-UUID file names,

@@ -46,30 +46,6 @@ object TextFunctions {
     Seq.fill(k)((next() | 1L, next()))
   }
 
-  /** MinHash signature: for each (a,b), min over shingles of
-    * (a * hash(shingle) + b) mod p. Null-free only when the shingle
-    * array is non-empty — callers filter empties first.
-    */
-  def minhashes(shingleCol: Column, coeffs: Seq[(Long, Long)]): Column = {
-    val hs = transform(shingleCol, tokenHash(_))
-    array(coeffs.map { case (a, b) =>
-      array_min(transform(hs, h => (h * lit(a) + lit(b)) % lit(HashPrime)))
-    }: _*)
-  }
-
-  /** 32-bit SimHash over token hashes (with multiplicity): bit j of
-    * the result is 1 iff the sum of ±1 votes from each token's bit j
-    * is positive.
-    */
-  def simhash32(toks: Column): Column = {
-    val hs = transform(toks, tokenHash(_))
-    (0 until 32).map { j =>
-      val votes = aggregate(hs, lit(0L),
-        (acc, h) => acc + when(shiftright(h, j).bitwiseAND(1) === 1, 1L).otherwise(-1L))
-      when(votes > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
   /** Hamming distance between two simhash values. */
   def hamming32(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))

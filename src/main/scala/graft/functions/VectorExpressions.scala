@@ -148,8 +148,8 @@ case class HilbertIndex2(left: Expression, right: Expression)
   * rotate/reflect walk as Gray-code bit surgery, O(n·bits)) → one
   * MSB-first bit interleave into a long. Generalizes [[HilbertIndex2]]
   * to the 3–4 real layout axes (source × language × date × size) that
-  * [[graft.operators.LayoutOps.mortonN]] already serves on the Z
-  * side, with the same locality win over Morton: consecutive indexes
+  * [[graft.operators.ManifestLog.writeClusteredN]] clusters on, with
+  * the locality win over Morton: consecutive indexes
   * are ALWAYS edge-adjacent cells in every dimension count
   * (exhaustively spec-pinned per n), so box predicates decompose into
   * fewer, longer index runs. `bits` per axis must keep n·bits ≤ 63 so

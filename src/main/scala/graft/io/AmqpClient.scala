@@ -287,12 +287,6 @@ final class AmqpClient(host: String, port: Int, vhost: String = "/",
     expectMethod(60, 111)
   }
 
-  /** Basic.Cancel → CancelOk. */
-  def basicCancel(consumerTag: String): Unit = {
-    sendMethod(1, 60, 30, new Writer().shortstr(consumerTag).u8(0).bytes)
-    expectMethod(60, 31)
-  }
-
   // ---- publishing ----
 
   /** Basic.Publish + content header + body frames (split at the tuned

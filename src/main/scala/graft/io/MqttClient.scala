@@ -8,9 +8,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   * send-mqtt sink exercise (reference src/input/mqtt.ts:109-213,
   * src/step-functions/send-mqtt.ts:86-185): CONNECT/CONNACK,
   * SUBSCRIBE/SUBACK, PUBLISH at qos 0/1/2 (PUBACK for qos 1, the
-  * PUBREC/PUBREL/PUBCOMP handshake for qos 2),
-  * UNSUBSCRIBE/UNSUBACK, DISCONNECT. Pure JVM, no client library —
-  * same offline-viable pattern as [[RespClient]]/[[AmqpClient]].
+  * PUBREC/PUBREL/PUBCOMP handshake for qos 2), DISCONNECT. Pure JVM,
+  * no client library — same offline-viable pattern as
+  * [[RespClient]]/[[AmqpClient]].
   *
   * The reference sets an MQTT 5 `contentType` property on publishes;
   * 3.1.1 has no properties, so that single field is a documented
@@ -117,14 +117,6 @@ final class MqttClient(host: String, port: Int,
     writePacket(Subscribe, 0x2, body)
     val ack = expectPacket(Suback)
     ack(2) & 0xff
-  }
-
-  def unsubscribe(topicFilter: String): Unit = {
-    val pid = nextPacketId()
-    writePacket(Unsubscribe, 0x2,
-      Array[Byte]((pid >> 8).toByte, (pid & 0xff).toByte) ++ utf8(topicFilter))
-    expectPacket(Unsuback)
-    ()
   }
 
   /** Next received PUBLISH as (topic, payload-text); acks qos-1

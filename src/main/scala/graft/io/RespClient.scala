@@ -19,7 +19,7 @@ object Resp {
   * client library (zero egress environment). Covers what the
   * reference's redis input and send-redis sink use
   * (src/input/redis.ts:130-237, src/step-functions/send-redis.ts:
-  * 100-191): list queues (RPUSH/LPUSH/BLPOP/LPOP), pub/sub
+  * 100-191): list queues (RPUSH/BLPOP/LPOP), pub/sub
   * (PUBLISH/SUBSCRIBE), AUTH/SELECT on connect.
   *
   * One client per connection, not thread-safe — matches the
@@ -57,7 +57,6 @@ final class RespClient(host: String, port: Int, connectTimeoutMs: Int = 5000,
   def select(db: Int): Unit = expectOk(command("SELECT", db.toString))
 
   def rpush(key: String, value: String): Long = expectNum(command("RPUSH", key, value))
-  def lpush(key: String, value: String): Long = expectNum(command("LPUSH", key, value))
   def publish(channel: String, value: String): Long = expectNum(command("PUBLISH", channel, value))
 
   /** Blocking pop: Some(key -> value), or None on timeout (nil reply). */

@@ -56,24 +56,6 @@ object EventName {
   */
 object Signatures {
 
-  /** JSON-encode a small scalar/string the way `JSON.stringify` does.
-    * Payloads that are already JSON text are passed through verbatim
-    * by callers; this helper is for plain strings (names etc).
-    */
-  def jsonString(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"'           => sb.append("\\\"")
-      case '\\'          => sb.append("\\\\")
-      case '\n'          => sb.append("\\n")
-      case '\r'          => sb.append("\\r")
-      case '\t'          => sb.append("\\t")
-      case c if c < ' '  => sb.append(f"\\u${c.toInt}%04x")
-      case c             => sb.append(c)
-    }
-    sb.append('"').toString
-  }
-
   def sha1Base64Url(parts: Seq[String]): String = {
     val md = MessageDigest.getInstance("SHA-1")
     parts.foreach(p => md.update(p.getBytes(StandardCharsets.UTF_8)))

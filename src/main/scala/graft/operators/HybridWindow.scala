@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.DataFrame
 
 /** The reference's core windowing semantic (src/step.ts:70-151): a
   * vector closes at whichever comes first of (a) `maxEvents` events,
@@ -51,42 +49,5 @@ object HybridWindow {
       AttributeReference("vec_id", LongType, nullable = false)(),
       analyzed)
     ColumnBridge.ofRows(spark, node)
-  }
-
-  /** The opaque mapPartitions formulation — kept as the reference
-    * implementation the native operator is differentially tested
-    * against.
-    */
-  def anchoredVectorsRows(df: DataFrame, keyCols: Seq[String], tsMicrosCol: String,
-                          tieCols: Seq[String], maxEvents: Int, maxSeconds: Double): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField("vec_id", LongType, nullable = false))
-    val keyIdx = keyCols.map(df.schema.fieldIndex)
-    val tsIdx = df.schema.fieldIndex(tsMicrosCol)
-    val maxUs: Long = if (maxSeconds > 0) (maxSeconds * 1e6).toLong else Long.MaxValue
-    val maxN: Long = if (maxEvents > 0) maxEvents.toLong else Long.MaxValue
-
-    val sortCols = (keyCols :+ tsMicrosCol) ++ tieCols
-    val sorted = df
-      .repartition(keyCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-
-    sorted.mapPartitions { rows =>
-      var curKey: Seq[Any] = null
-      var vecId = -1L
-      var count = 0L
-      var firstUs = 0L
-      rows.map { r =>
-        val k = keyIdx.map(r.get)
-        val ts = r.getLong(tsIdx)
-        if (curKey == null || k != curKey) {
-          curKey = k; vecId = 0L; count = 1L; firstUs = ts
-        } else if (count >= maxN || ts - firstUs >= maxUs) {
-          vecId += 1L; count = 1L; firstUs = ts
-        } else {
-          count += 1L
-        }
-        Row.fromSeq(r.toSeq :+ vecId)
-      }
-    }(Encoders.row(outSchema))
   }
 }

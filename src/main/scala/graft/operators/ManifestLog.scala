@@ -1036,6 +1036,32 @@ object ManifestLog {
       s"concurrent initial write at $path")
   }
 
+  /** Hilbert value of 2–4 numeric columns: one stats pass
+    * min/max-scales each column to a cell id, then the codegen'd
+    * Skilling kernel ([[graft.functions.HilbertIndexN]]) interleaves
+    * along the n-dimensional Hilbert curve. 16 bits per axis through 3
+    * columns; 15 at 4 so the index stays a non-negative long (60 bits)
+    * and range ordering holds.
+    */
+  private def hilbertValueN(df: DataFrame, cols: Seq[String]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions._
+    require(cols.length >= 2 && cols.length <= 4,
+      s"hilbertValueN supports 2-4 columns, got ${cols.length}")
+    val bits = if (cols.length == 4) 15 else 16
+    val cells = 1L << bits
+    val r = df.agg(
+      cols.flatMap(c => Seq(min(col(c)).cast("double"), max(col(c)).cast("double"))).head,
+      cols.flatMap(c => Seq(min(col(c)).cast("double"), max(col(c)).cast("double"))).tail: _*
+    ).head()
+    val buckets = cols.zipWithIndex.map { case (c, i) =>
+      val lo = r.getDouble(2 * i); val hi = r.getDouble(2 * i + 1)
+      val span = math.max(hi - lo, java.lang.Double.MIN_NORMAL)
+      least(floor((col(c).cast("double") - lit(lo)) / lit(span) * cells).cast("long"),
+        lit(cells - 1))
+    }
+    graft.functions.VectorExpressions.hilbertN(buckets, bits)
+  }
+
   /** Initial load clustered on the Hilbert curve of 2–4 axes —
     * MULTI-DIMENSIONAL data skipping under the versioned log (Delta's
     * Z-order + file-stats shape, on the better curve): the Hilbert
@@ -1058,7 +1084,7 @@ object ManifestLog {
       s"clustered tables take 2-4 axes, got ${statsCols.size}")
     require(statsCols.distinct.size == statsCols.size, "duplicate clustering axis")
     val spark = df.sparkSession
-    df.withColumn("__h", LayoutOps.hilbertValueN(df, statsCols))
+    df.withColumn("__h", hilbertValueN(df, statsCols))
       .repartitionByRange(files, col("__h"))
       .sortWithinPartitions("__h")
       .drop("__h")
@@ -1085,7 +1111,7 @@ object ManifestLog {
     val axes = statsColumnsX(spark, path)
     require(axes.nonEmpty, s"$path is not a clustered table (no clustered axes in its meta)")
     val batchDir = newBatchDir(path)
-    df.withColumn("__h", LayoutOps.hilbertValueN(df, statsCol +: axes))
+    df.withColumn("__h", hilbertValueN(df, statsCol +: axes))
       .repartitionByRange(files, col("__h"))
       .sortWithinPartitions("__h")
       .drop("__h")
@@ -1450,7 +1476,7 @@ object ManifestLog {
     // single-key layout (key lo/hi pruning is correct under any order)
     val axes = statsColumnsX(spark, path).filter(out.columns.contains)
     if (axes.nonEmpty)
-      out.withColumn("__h", LayoutOps.hilbertValueN(out, statsCol +: axes))
+      out.withColumn("__h", hilbertValueN(out, statsCol +: axes))
         .repartitionByRange(nOut, col("__h"))
         .sortWithinPartitions("__h")
         .drop("__h")

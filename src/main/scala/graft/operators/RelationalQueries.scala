@@ -119,11 +119,27 @@ object RelationalQueries {
           .as("ps_costc"))
   }
 
+  /** Write `df` as a bucketed, bucket-sorted managed table at `path`.
+    * `buckets` should match across tables meant to co-join (Spark
+    * requires equal bucket counts — or a multiple with
+    * `spark.sql.bucketing.coalesceBucketsInJoin.enabled` — to elide
+    * the exchange).
+    */
+  private[operators] def writeBucketed(df: DataFrame, table: String, path: String,
+                                       key: String, buckets: Int): Unit =
+    df.write
+      .bucketBy(buckets, key)
+      .sortBy(key)
+      .option("path", path)
+      .mode("overwrite")
+      .format("parquet")
+      .saveAsTable(table)
+
   /** Bucketed twins of the q12 join inputs, written ONCE per session:
     * the transport-columned lineitem and the (orderkey, priority)
     * orders projection, each as a bucketed bucket-sorted table on its
     * order key (hash(key) mod 8 file groups + in-file key order —
-    * [[LayoutOps.writeBucketed]]). The write pays the q12 shuffle at
+    * [[writeBucketed]]). The write pays the q12 shuffle at
     * LAYOUT time; every later equi-join on the key reads matching
     * buckets side by side with no Exchange on either side. Tables are
     * tagged by the sf dir so Verify/Bench/ScaleBench runs over
@@ -138,12 +154,12 @@ object RelationalQueries {
     synchronized {
       if (!s.catalog.tableExists(li) || !s.catalog.tableExists(ord)) {
         val base = java.nio.file.Files.createTempDirectory("graft-q12-bkt")
-        LayoutOps.writeBucketed(
+        writeBucketed(
           withTransportCols(Tables.lineitem(s, d))
             .select("l_orderkey", "l_shipmode", "l_shipdate",
               "l_commitdate", "l_receiptdate"),
           li, base.resolve("li").toString, "l_orderkey", buckets = 8)
-        LayoutOps.writeBucketed(
+        writeBucketed(
           Tables.orders(s, d).select("o_orderkey", "o_orderpriority"),
           ord, base.resolve("ord").toString, "o_orderkey", buckets = 8)
       }

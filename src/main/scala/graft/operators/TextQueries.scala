@@ -273,7 +273,7 @@ object TextQueries {
   // probe below keeps the corpus-sized side SCAN-ONLY — the batch
   // (small by definition) is broadcast into the index scan, so no
   // corpus-sized shuffle ever happens; store the index bucketed by
-  // its join key (LayoutOps pattern) and the scan prunes too. ----
+  // its join key (RelationalQueries.writeBucketed) and the scan prunes too. ----
 
   /** Exact-dedup corpus index: one row per distinct content hash with
     * the keeper doc id. Built once per corpus, persisted, appended as

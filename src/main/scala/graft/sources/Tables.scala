@@ -40,21 +40,6 @@ object Tables {
   def cachedCount(s: SparkSession, d: String, name: String): Long =
     rowCounts.getOrElseUpdate(s"$d/$name", read(s, d, name).count())
 
-  /** Fan a narrow scan out to the session's parallelism when the
-    * source supplies fewer partitions than cores. The driver fixtures
-    * are single-file, SINGLE-ROW-GROUP parquet, so Spark plans every
-    * scan as ONE task and the whole pre-exchange stage (tokenize /
-    * md5 / shingle / JSON-render — the expensive part of the text and
-    * pipeline operators) runs on one core of 32 (guide §2.5: input
-    * skew, "repartition immediately after the read"). Scale-adaptive
-    * by construction: a production-sized table scans with >= cores
-    * input partitions and passes through UNTOUCHED — no payload
-    * shuffle is added at scale, the exchange exists exactly when the
-    * input cannot feed the cores. Callers put this AFTER the narrow
-    * column select so the exchange carries only needed columns, and
-    * only on queries whose downstream order does not depend on
-    * partition layout (everything oracle-checked orders its output).
-    */
   /** Eager QUERY-SCOPED materialization — localCheckpoint, not
     * persist(): the storage blocks are freed by the ContextCleaner as
     * soon as the query's frames are GC'd, never a CacheManager entry
@@ -75,6 +60,21 @@ object Tables {
     // CacheManager entry.
     else df.localCheckpoint(eager = false)
 
+  /** Fan a narrow scan out to the session's parallelism when the
+    * source supplies fewer partitions than cores. The driver fixtures
+    * are single-file, SINGLE-ROW-GROUP parquet, so Spark plans every
+    * scan as ONE task and the whole pre-exchange stage (tokenize /
+    * md5 / shingle / JSON-render — the expensive part of the text and
+    * pipeline operators) runs on one core of 32 (guide §2.5: input
+    * skew, "repartition immediately after the read"). Scale-adaptive
+    * by construction: a production-sized table scans with >= cores
+    * input partitions and passes through UNTOUCHED — no payload
+    * shuffle is added at scale, the exchange exists exactly when the
+    * input cannot feed the cores. Callers put this AFTER the narrow
+    * column select so the exchange carries only needed columns, and
+    * only on queries whose downstream order does not depend on
+    * partition layout (everything oracle-checked orders its output).
+    */
   def fanout(df: DataFrame): DataFrame = {
     // conf-gated (default on) so the effect is A/B-able INSIDE one
     // session — on a container with drifting external load, an

@@ -119,7 +119,6 @@ object Spec {
   private val json = new ObjectMapper()
 
   def parseYaml(text: String): PipelineTemplate = fromNode(yaml.readTree(text))
-  def parseJson(text: String): PipelineTemplate = fromNode(json.readTree(text))
 
   def fromNode(root: JsonNode): PipelineTemplate = {
     require(root.isObject, "pipeline spec must be a mapping")

@@ -24,7 +24,7 @@ import graft.spec.Spec._
   *
   * Windows are keyed by event name (a keyed, scale-out upgrade of the
   * reference's single global buffer — the reference semantics are the
-  * `key = const` special case, selectable with `globalWindows`).
+  * `key = const` special case, selected by `window-key: global`).
   */
 object StreamCompiler {
 
@@ -187,7 +187,7 @@ object StreamCompiler {
   }
 
   def compile(spark: SparkSession, tpl: PipelineTemplate,
-              input: Dataset[SEvent], globalWindows: Boolean = false): CompiledStream = {
+              input: Dataset[SEvent]): CompiledStream = {
     import spark.implicits._
     val sinks = scala.collection.mutable.LinkedHashMap[String, StreamSinkSpec]()
     val outputs = scala.collection.mutable.LinkedHashMap[String, Dataset[SEvent]]()
@@ -206,7 +206,7 @@ object StreamCompiler {
             if (step.matchMode == MatchMode.Pass) Some(upstream.filter(!c)) else None)
       }
 
-      val processed = applyFn(spark, tpl, step, matched, sinks, globalWindows)
+      val processed = applyFn(spark, tpl, step, matched, sinks)
       outputs(step.name) = passed.fold(processed)(processed.union(_))
     }
 
@@ -219,11 +219,11 @@ object StreamCompiler {
 
   private def applyFn(spark: SparkSession, tpl: PipelineTemplate, step: StepSpec,
                       ds: Dataset[SEvent],
-                      sinks: scala.collection.mutable.Map[String, StreamSinkSpec],
-                      globalWindows: Boolean): Dataset[SEvent] = {
+                      sinks: scala.collection.mutable.Map[String, StreamSinkSpec]): Dataset[SEvent] = {
     import spark.implicits._
     val windowed = step.window.events > 1 || step.window.seconds > 0
-    val keyFn: SEvent => String = if (globalWindows) (_ => "") else (_.n)
+    val sharedWindows = tpl.windowKey == "global"
+    val keyFn: SEvent => String = if (sharedWindows) (_ => "") else (_.n)
 
     // reduce = disjoint count-or-time groups; flatmap = per-event
     // sliding buffers (reference src/step.ts:84-131)
@@ -415,7 +415,7 @@ object StreamCompiler {
                 // tiebreak hashes the vector identity in keyed mode
                 val vts = array_max(transform(col("events"), e => e.getField("ts")))
                 val seqCol =
-                  if (globalWindows) col("vecId")
+                  if (sharedWindows) col("vecId")
                   else xxhash64(col("key"), col("vecId"))
                 windowVectors(ds).toDF().select(
                   vc.outName.cast("string").as("n"),

@@ -99,33 +99,4 @@ class IncrementalDedupSpec extends AnyFunSuite {
       !(col("dup_of") % 10 < 3)).count() == 0)
     assert(out.filter(col("verdict") === "unique" && col("dup_of").isNotNull).count() == 0)
   }
-
-  test("bloom-manifested exact index: a wave probe touches only files that might hold its hashes, verdicts identical") {
-    // the 100-TB admission shape: the persisted hash index is laid out
-    // hash-partitioned with a bloom sidecar (zone maps prune NOTHING on
-    // a hash key); each crawl wave's probe consults the blooms and
-    // reads only surviving files. False positives only ADD files, so
-    // verdicts equal the full-index probe exactly.
-    val dir = tmpDir("bloom")
-    val index = TextQueries.buildExactIndex(corpus)
-      .withColumn("hk", xxhash64(col("h")))
-    LayoutOps.writeWithBloomManifest(index, "hk", dir,
-      files = 16, expectedPerFile = 1000L)
-    // a SMALL wave (sf0.001 batch is ~100 docs over 16 index files):
-    // most index files cannot contain any of its hashes
-    val wave = batch.limit(12)
-    val waveKeys = wave.select(xxhash64(md5(col("text"))).as("hk"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val (prunedIdx, surviving, total) =
-      LayoutOps.readPrunedByBloomSet(spark, dir, "hk", waveKeys)
-    assert(total == 16 && surviving < total,
-      s"bloom pruned nothing: $surviving/$total")
-    val fromPruned = TextQueries.probeExactIndex(
-        prunedIdx.select("h", "index_doc"), wave)
-      .collect().map(_.toString).sorted.toSeq
-    val fromFull = TextQueries.probeExactIndex(
-        spark.read.parquet(dir).select("h", "index_doc"), wave)
-      .collect().map(_.toString).sorted.toSeq
-    assert(fromPruned.nonEmpty && fromPruned == fromFull)
-  }
 }

@@ -1195,6 +1195,13 @@ class ManifestLogSpec extends AnyFunSuite {
     def suppBox() = ManifestLog.readPrunedN(spark, dir3, Seq(("l_suppkey", sLo, sA)))
     val exact3 = data3.filter(col("l_suppkey").between(sLo, sA))
       .collect().map(_.toString).sorted.toSeq
+    // a box on all three axes: exact parity, and most files skipped
+    val box3 = Seq(("l_orderkey", kLo, kA), ("l_partkey", pLo, pA), ("l_suppkey", sLo, sA))
+    val exactBox3 = data3.filter(box3.map { case (c, lo, hi) => col(c).between(lo, hi) }
+      .reduce(_ && _)).collect().map(_.toString).sorted.toSeq
+    val (b3df, b3Surv, b3Total) = ManifestLog.readPrunedN(spark, dir3, box3)
+    assert(b3df.collect().map(_.toString).sorted.toSeq == exactBox3 && exactBox3.nonEmpty)
+    assert(b3Total == 16 && b3Surv * 2 <= b3Total, s"3-axis box kept $b3Surv/$b3Total files")
     val (gone3, born3) = ManifestLog.compact(spark, dir3, "l_orderkey",
       targetRows = data3.count() / 8 + 1)
     assert(gone3 == 16 && born3 >= 2)

@@ -180,28 +180,37 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming pipeline: rename + windowed jq through the stream compiler") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tpl = Spec.parseYaml(
-      """name: sp
-        |steps:
-        |  mark:
-        |    flatmap:
-        |      rename:
-        |        prepend: "s."
-        |  agg:
-        |    after: [mark]
-        |    window:
-        |      events: 2
-        |    reduce:
-        |      send-receive-jq: '{n: "agg", d: (map(.d) | add)}'
-        |""".stripMargin)
-    val mem = MemoryStream[SEvent]
-    val compiled = StreamCompiler.compile(spark, tpl, mem.toDS())
-    val (name, q) = runToMemory(compiled.output.map(e => (e.n, e.d)))
-    mem.addData(ev("x", "1", 1), ev("x", "2", 2), ev("x", "10", 3), ev("x", "20", 4))
-    q.processAllAvailable()
-    val rows = spark.table(name).collect().map(r => (r.getString(0), r.getString(1)))
-    assert(rows.toSet == Set(("agg", "3"), ("agg", "30")))
-    q.stop()
+    def tpl(header: String) = Spec.parseYaml(
+      s"""name: sp
+         |$header
+         |steps:
+         |  mark:
+         |    flatmap:
+         |      rename:
+         |        prepend: "s."
+         |  agg:
+         |    after: [mark]
+         |    window:
+         |      events: 2
+         |    reduce:
+         |      send-receive-jq: '{n: "agg", d: (map(.d) | add)}'
+         |""".stripMargin)
+    def run(header: String, events: SEvent*): Set[(String, String)] = {
+      val mem = MemoryStream[SEvent]
+      val compiled = StreamCompiler.compile(spark, tpl(header), mem.toDS())
+      val (name, q) = runToMemory(compiled.output.map(e => (e.n, e.d)))
+      mem.addData(events: _*)
+      q.processAllAvailable()
+      val rows = spark.table(name).collect().map(r => (r.getString(0), r.getString(1)))
+      q.stop()
+      rows.toSet
+    }
+    assert(run("", ev("x", "1", 1), ev("x", "2", 2), ev("x", "10", 3), ev("x", "20", 4)) ==
+      Set(("agg", "3"), ("agg", "30")))
+    // window-key: global shares one window across names, as in batch
+    assert(run("window-key: global",
+      ev("x", "1", 1), ev("y", "2", 2), ev("x", "10", 3), ev("y", "20", 4)) ==
+      Set(("agg", "3"), ("agg", "30")))
   }
 
   test("streaming compiled jq tier matches the subprocess tier per event") {
